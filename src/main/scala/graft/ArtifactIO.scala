@@ -60,11 +60,12 @@ object ArtifactIO {
     * per-path, never global — `build` callbacks call back into memoized
     * builders (GraftCache.Once monitors) that themselves publish OTHER
     * artifact dirs, so one global monitor here closes a lock cycle the
-    * moment two warm threads walk the memo DAG from different ends
-    * (observed: gaugeDeleteRecall held this monitor wanting the
-    * graphArtifactDir Once while filteredGraphCandShared held that Once
-    * wanting this monitor). Memo dependencies form a DAG over distinct
-    * paths, so per-path monitors cannot cycle.
+    * moment two threads walk the memo DAG from different ends — e.g. one
+    * holds this monitor wanting the graphArtifactDir Once while another
+    * holds that Once wanting this monitor. h_impact_compare's Futures,
+    * `Experiments.forked` and concurrent queries on one session all run
+    * builds on several threads. Memo dependencies form a DAG over
+    * distinct paths, so per-path monitors cannot cycle.
     */
   private val dirLocks = scala.collection.concurrent.TrieMap[String, Object]()
 

@@ -89,8 +89,8 @@ object DocsGen {
     rewrite(repo.resolve("README.md"), block)
     rewrite(repo.resolve("COVERAGE.md"), block)
     // Stale-count guard (r16 — the r14 AND r15 verdicts each carried a
-    // hand-edited "N registered queries" that lagged the surface by one
-    // wave): any literal query count OUTSIDE the generated block is a
+    // hand-edited "N registered queries" that lagged the surface by a few
+    // queries): any literal query count OUTSIDE the generated block is a
     // regression waiting to be judged; fail the regen instead of shipping it.
     Seq("README.md", "COVERAGE.md").foreach { f =>
       val text  = Files.readString(repo.resolve(f))

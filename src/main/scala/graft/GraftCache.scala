@@ -14,9 +14,14 @@ object GraftCache {
 
   /** Once-only holder: `TrieMap.getOrElseUpdate` is not atomic (two racing
     * threads may both evaluate the update expression; the loser's value is
-    * discarded), and the bench's background warm futures (cdcLogFuture,
-    * knnChainFuture, …) introduce genuine same-key concurrency on these
-    * memos. Creating a holder is side-effect-free, so a lost race discards
+    * discarded), and memo bodies do run on several threads at once:
+    * h_impact_compare forks its carrier memos as Futures,
+    * `Experiments.forked` materializes a grid's independent builds on pool
+    * threads, and callers may run queries concurrently on one session.
+    * Shared artifacts are built on demand by their first consumer, on that
+    * consumer's thread; a concurrent consumer of the same key blocks on
+    * the in-flight build.
+    * Creating a holder is side-effect-free, so a lost race discards
     * an UNFORCED holder; the winner's `value` then evaluates the body
     * exactly once JVM-wide (lazy-val synchronization on the holder). This
     * makes double `persist()` marks and double-run side-effecting bodies

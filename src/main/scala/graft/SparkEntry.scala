@@ -119,70 +119,9 @@ object SparkEntry {
     * a flat scan.
     */
   private def nearDupPairsShared(s: SparkSession, dir: String): DataFrame =
-    try nearDupPairsFuture(s, dir).get()
-    catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-
-  /** Warm build of the kNN-pass memo chain (rawKnn → edges → ai): the
-    * memos are lazy persists, so the FIRST consuming query otherwise pays
-    * the whole chain's materialization. One background count() on the ai
-    * frame builds every cache block in the chain; kicked non-blocking by
-    * ann_brute_topk (the family's first member), same discipline as the
-    * other session artifacts. Caller's session — nothing here mutates conf.
-    */
-  private def knnChainFuture(s: SparkSession, dir: String)
-      : java.util.concurrent.Future[Unit] =
-    ingestWarmLock.synchronized {
-      GraftCache.memoAny(s"$dir/knnchainfut") {
-        val fut = warmPool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            ai(s, dir).count()
-            // r20 wave 5: the chain's remaining slack drains the kNN-derived
-            // single-consumer results, in first-consumer order
-            attackHitRateShared(s, dir).count()   // attack_hit_rate
-            crossNearDupShared(s, dir).count()    // dedup_cross_neardup
-            crossNearDupLargeShared(s, dir).count() // dedup_cross_neardup_large
-            jaccardPairsShared(s, dir).count()    // dedup_jaccard_pairs
-            hitrateCurveShared(s, dir).count()    // h_hitrate_curve
-            // r20 wave 7: the four published-curve/grid results ride THIS
-            // chain, not wmGridFuture's — kicked at the pass's 3rd query,
-            // this ladder's consumer order is monotone all the way to
-            // h_scpw_grid (#77) and the huge ann-block window absorbs the
-            // grid work without crowding the dedup block (the wave-7
-            // first attempt put them on wmGridFuture at the dedup head and
-            // starved five chains at once — measured and reverted)
-            qualityCurveShared(s, dir).count()     // h_quality_curve
-            qualityCurveRandShared(s, dir).count() // h_quality_curve_rand
-            robustnessGridShared(s, dir).count()   // h_robustness_grid
-            scpwGridShared(s, dir).count()         // h_scpw_grid
-            ()
-          }
-        })
-        GraftCache.onClear(() => { fut.cancel(true); () })
-        fut
-      }
-    }
-
-  /** The pair frame's warm build as a memoized background future, kicked
-    * non-blocking by the dedup family's first member (dedup_cross_neardup)
-    * so the LSH band + verify passes overlap the family's other queries
-    * instead of serializing inside the first consumer (dedup_keep_best) —
-    * the cdcLogFuture pattern. Built on the CALLER's session (nothing here
-    * mutates session conf, so no clone is needed — h_impact_compare's
-    * futures already run concurrent jobs on the shared session).
-    */
-  private def nearDupPairsFuture(s: SparkSession, dir: String)
-      : java.util.concurrent.Future[DataFrame] =
-    ingestWarmLock.synchronized {
-      GraftCache.memoAny(s"$dir/ndpairsfut") {
-        val fut = warmPool.submit(new java.util.concurrent.Callable[DataFrame] {
-          def call(): DataFrame = GraftCache.memo(s"$dir/ndpairs") {
-            Dedup.nearDupPairs(Tables.documents(s, dir), threshold = 0.5)
-              .localCheckpoint()
-          }
-        })
-        GraftCache.onClear(() => { fut.cancel(true); () })
-        fut
-      }
+    GraftCache.memo(s"$dir/ndpairs") {
+      Dedup.nearDupPairs(Tables.documents(s, dir), threshold = 0.5)
+        .localCheckpoint()
     }
   /** Driver-known APPROXIMATE vocabulary cardinality (HLL, ±~2%) of the
     * documents table, memoized per scale dir — the regime input for the
@@ -1339,6 +1278,24 @@ object SparkEntry {
   private def nanos(c: org.apache.spark.sql.Column) =
     floor(c.cast("double") * lit(1.0e9) + lit(0.5))
 
+  /** cdcLogTableShared WITH the v6 compaction the change-feed consumers
+    * expect in the shared history — the head guard keeps the table
+    * deterministic whichever of the four sharing queries runs first (and
+    * if one runs twice in a session). One definition; the guard was
+    * copy-pasted at every consumer before r19's review.
+    */
+  private def cdcLogCompactedShared(s: SparkSession, dir: String): String =
+    // memoAny: the compaction must land exactly once per session — a bare
+    // headVersion==5 check at every consumer would let two racing callers
+    // (concurrent queries on one session) BOTH compact (v6 AND v7),
+    // changing every version-enumerating reader
+    GraftCache.memoAny(s"$dir/cdclogcompacted") {
+      val table = cdcLogTableShared(s, dir) // v1–5 (shared with merge_cdc)
+      if (graft.sources.TableLog.headVersion(table) == 5)
+        graft.sources.TableLog.compact(s, table) // v6: empty change feed
+      table
+    }
+
   /** The CDC-merged TableLog table (versions 1–5: four upsert slices then
     * the tombstone batch, via the five-micro-batch streaming MERGE), built
     * ONCE per session and shared by q_stream_merge_cdc (reads v4/v5) and
@@ -1347,68 +1304,20 @@ object SparkEntry {
     * streaming merge is the dominant cost of both queries and their inputs
     * are the same deterministic table, so building it twice per bench pass
     * measured duplication, not operators (r16: the pair cost ~15 s/pass,
-    * shared ~10 s).
+    * shared ~10 s). Built on a CLONED session: the build mutates the
+    * stream shuffle-partition setting, so the clone keeps that conf change
+    * out of the caller's session.
     */
-  /** cdcLogTableShared WITH the v6 compaction the change-feed consumers
-    * expect in the shared history — the head guard keeps the table
-    * deterministic whichever of the four sharing queries runs first (and
-    * if one runs twice in a session). One definition; the guard was
-    * copy-pasted at every consumer before r19's review.
-    */
-  private def cdcLogCompactedShared(s: SparkSession, dir: String): String =
-    // memoAny (once-only): the post-CDC warm chain and the late stream
-    // chain both consume the compacted table concurrently with foreground
-    // queries — a bare headVersion==5 check would let two racing callers
-    // BOTH compact (v6 AND v7), changing every version-enumerating reader
-    GraftCache.memoAny(s"$dir/cdclogcompacted") {
-      val table = cdcLogTableShared(s, dir) // v1–5 (shared with merge_cdc)
-      if (graft.sources.TableLog.headVersion(table) == 5)
-        graft.sources.TableLog.compact(s, table) // v6: empty change feed
-      table
-    }
-
-  /** The CDC table's warm build, as a memoized FUTURE on a background
-    * thread over a CLONED session (own SQLConf — the build mutates the
-    * stream shuffle-partition setting), mirroring graphIngestFuture: the
-    * earliest change-feed consumer of a pass (q_events_changefeed) kicks
-    * it non-blocking, so the five-micro-batch streaming MERGE overlaps
-    * the lake/changefeed queries between it and the first CDC-table
-    * consumer (q_events_ivm_catchup) — the streamTrio amortization
-    * applied across queries, per the r18 verdict's #1b prescription. The
-    * cost is real and still paid (~3.5 s of background work); it just no
-    * longer serializes the pass. Consumers block only on the remainder.
-    */
-  private def cdcLogFuture(s: SparkSession, dir: String)
-      : java.util.concurrent.Future[String] =
-    ingestWarmLock.synchronized {
-      GraftCache.memoAny(s"$dir/cdclogtable") {
-        val bg = s.newSession()
-        val fut = warmPool.submit(new java.util.concurrent.Callable[String] {
-          def call(): String = cdcLogTableBuild(bg, dir)
-        })
-        // a pass that starts the warm build but never awaits it (a filtered
-        // BENCH_ONLY run) must not leak the thread into the next pass
-        GraftCache.onClear(() => { fut.cancel(true); () })
-        fut
-      }
-    }
   private def cdcLogTableShared(s: SparkSession, dir: String): String =
-    try cdcLogFuture(s, dir).get()
-    catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    GraftCache.memoAny(s"$dir/cdclogtable") { cdcLogTableBuild(s.newSession(), dir) }
 
   private def cdcLogTableBuild(s: SparkSession, dir: String): String = {
-      // warm start (non-blocking): the graph-ANN ingest build is the other
-      // session-shared STREAMING artifact — kick it before this build so
-      // its overlap window spans the whole CDC/IVM block too
-      graphIngestFuture(s, dir)
       val n = streamSinkSeq.incrementAndGet()
       val base = replayCkptBase(n)
       val table = new java.io.File(base, "cdclog").getAbsolutePath
       // cleanup registered BEFORE the stream starts (the graphIngestBuild
-      // pattern): a build cancelled mid-flight — the warm future's
-      // fut.cancel(true) on a filtered BENCH_ONLY pass — must still have
-      // its /dev/shm dirs reclaimed at cache clear, not only on the
-      // success path
+      // pattern): a build that fails mid-flight must still have its
+      // /dev/shm dirs reclaimed at cache clear, not only on the success path
       GraftCache.onClear(() => rmTree(base))
       withStreamShufflePartitions(s, 4) {
         val replay = eventsCdcReplayDir(s, dir)
@@ -1423,19 +1332,11 @@ object SparkEntry {
           .option("checkpointLocation",
             new java.io.File(base, "cdcckpt").getAbsolutePath)
           .start()
-        // stop in finally: the warm future's cancel interrupts THIS waiting
-        // thread — without the finally, the StreamingQuery's own execution
-        // thread would keep running the replay for the rest of the session
+        // stop in finally: if the wait is interrupted or fails, the
+        // StreamingQuery's own execution thread must not keep running the
+        // replay for the rest of the session
         try q.processAllAvailable() finally q.stop()
       }
-      // chain the post-CDC warm work behind this build: first the three
-      // IVM view folds (their consumers sit a dozen queries after the CDC
-      // block), then the stream trio (its first consumer, q_stream_block,
-      // sits far enough down the pass that the serialized chain still
-      // finishes early). One background build at a time keeps the two
-      // streaming builds from contending for the window the CDC consumers
-      // await.
-      postCdcFuture(s, dir)
       table
     }
 
@@ -1551,9 +1452,9 @@ object SparkEntry {
         concat(col("vec_id").cast("string"), lit("|grep")), RepMod) === 0L
       def tag(df: DataFrame, l: String) =
         df.select("src", "dst", "dist").withColumn("layer", lit(l))
-      // cleanup registered BEFORE the stream starts: a build cancelled
-      // mid-flight (warm future, filtered run) must still have its dirs
-      // reclaimed at cache clear, not only on the success path
+      // cleanup registered BEFORE the stream starts: a build that fails
+      // mid-flight must still have its dirs reclaimed at cache clear, not
+      // only on the success path
       GraftCache.onClear(() => rmTree(base))
       withStreamShufflePartitions(s, 4) {
         val replay = graft.streaming.StreamOps.multiBatchTableDir(
@@ -1592,9 +1493,9 @@ object SparkEntry {
           .option("checkpointLocation",
             new java.io.File(base, "gickpt").getAbsolutePath)
           .start()
-        // stop in finally: an interrupt from the warm future's cancel must
-        // not leave the query's own execution thread polling the replay
-        // dir for the rest of the session
+        // stop in finally: an interrupted or failed wait must not leave
+        // the query's own execution thread polling the replay dir for the
+        // rest of the session
         try q.processAllAvailable() finally q.stop()
       }
       require(graft.sources.TableLog.headVersion(layersT) == IngestChunks,
@@ -1602,38 +1503,12 @@ object SparkEntry {
       (layersT, corpT)
   }
 
-  /** The ingest build runs on a BACKGROUND thread over a CLONED session
-    * (own SQLConf — withStreamShufflePartitions mutates session state, so
-    * the clone keeps the 4-partition stream setting from racing foreground
-    * queries' plans). q_stream_block kicks the future off non-blocking, so
-    * the build overlaps the concurrent stream block and every query between
-    * it and q_stream_graph_ingest — the same per-micro-batch fixed-cost
-    * amortization streamTrio does for its legs, applied across queries.
-    * The memoized value is the FUTURE (one build per scale dir regardless
-    * of which query arrives first); consumers block only on the remainder.
+  /** The ingest tables, built once per scale dir on a CLONED session (own
+    * SQLConf — withStreamShufflePartitions mutates session state, so the
+    * clone keeps the 4-partition stream setting out of the caller's plans).
     */
-  private val ingestWarmLock = new Object
-  private lazy val warmPool = java.util.concurrent.Executors.newCachedThreadPool(
-    (r: Runnable) => { val t = new Thread(r, "graft-ingest-warm"); t.setDaemon(true); t })
-  private def graphIngestFuture(s: SparkSession, dir: String)
-      : java.util.concurrent.Future[(String, String)] =
-    ingestWarmLock.synchronized {
-      GraftCache.memoAny(s"$dir/graphingest") {
-        val bg = s.newSession()
-        val fut = warmPool.submit(new java.util.concurrent.Callable[(String, String)] {
-          def call(): (String, String) = graphIngestBuild(bg, dir)
-        })
-        // a pass that starts the warm build but never awaits it (a filtered
-        // BENCH_ONLY run) must not leak the thread into the next pass —
-        // cancel at cache clear (no-op once completed; the consumers always
-        // await before any clear in a full run)
-        GraftCache.onClear(() => { fut.cancel(true); () })
-        fut
-      }
-    }
   private def graphIngestShared(s: SparkSession, dir: String): (String, String) =
-    try graphIngestFuture(s, dir).get()
-    catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    GraftCache.memoAny(s"$dir/graphingest") { graphIngestBuild(s.newSession(), dir) }
 
   /** The four streaming queries (watermarked tumbling windows, dedup under
     * duplicate delivery, the stateful sessionizer, and the documents-replay
@@ -1645,40 +1520,20 @@ object SparkEntry {
     * runs — the queries share only the immutable replay files, never state.
     */
   private def streamTrio(s: SparkSession, dir: String): Map[String, DataFrame] =
-    try streamTrioFuture(s, dir).get()
-    catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    GraftCache.memoAny(s"$dir/streamtrio") { streamTrioBuild(s.newSession(), dir) }
 
-  /** The trio's warm build as a memoized background future on a CLONED
-    * session (the build mutates the stream shuffle-partition conf, and the
-    * memory sinks' temp views live in the building session's catalog — the
-    * legs are returned as that session's Datasets and every consumer reads
-    * its leg standalone), kicked non-blocking by the pass's earliest
-    * streaming-infrastructure consumer alongside the CDC build: the
-    * five-leg concurrent replay then overlaps the lake/changefeed block
-    * instead of serializing inside q_stream_block.
+  /** The replay build, run on a CLONED session: it mutates the stream
+    * shuffle-partition conf, and the memory sinks' temp views live in the
+    * building session's catalog — the legs are returned as that session's
+    * Datasets and every consumer reads its leg standalone.
     */
-  private def streamTrioFuture(s: SparkSession, dir: String)
-      : java.util.concurrent.Future[Map[String, DataFrame]] =
-    ingestWarmLock.synchronized {
-      GraftCache.memoAny(s"$dir/streamtriofut") {
-        val bg = s.newSession()
-        val fut = warmPool.submit(
-          new java.util.concurrent.Callable[Map[String, DataFrame]] {
-            def call(): Map[String, DataFrame] = streamTrioBuild(bg, dir)
-          })
-        GraftCache.onClear(() => { fut.cancel(true); () })
-        fut
-      }
-    }
-
-  private def streamTrioBuild(s: SparkSession, dir: String): Map[String, DataFrame] =
-    GraftCache.memoAny(s"$dir/streamtrio") {
+  private def streamTrioBuild(s: SparkSession, dir: String): Map[String, DataFrame] = {
       import s.implicits._
       val n = streamSinkSeq.incrementAndGet()
       val ckptBase = replayCkptBase(n)
       def ckpt(leg: String) = new java.io.File(ckptBase, leg).getAbsolutePath
       // cleanup registered BEFORE any leg starts (the graphIngestBuild
-      // pattern): a build cancelled mid-flight must still have its
+      // pattern): a build that fails mid-flight must still have its
       // checkpoint dirs reclaimed and any already-registered memory-sink
       // views dropped at cache clear. The memory sinks live in the session
       // catalog and hold their rows on the driver; "stream_*_$n" names are
@@ -1780,17 +1635,12 @@ object SparkEntry {
           .outputMode("append").start()
         started += sjoin
         started.foreach(_.processAllAvailable())
-        // stop in finally: the warm future's cancel interrupts THIS waiting
-        // thread mid-replay — every ALREADY-STARTED leg's execution thread
-        // must be stopped, or it keeps running for the rest of the session
+        // stop in finally: if one leg fails or the wait is interrupted,
+        // every ALREADY-STARTED leg's execution thread must be stopped, or
+        // it keeps running for the rest of the session
         } finally started.foreach(q =>
           try q.stop() catch { case _: Throwable => () })
       }
-      // chain the late stream builds (change-feed IVM audit, IVF ingest,
-      // the two upsert merges) behind the trio: their consumers are the
-      // last q_stream_* queries of a pass, so the serialized chain has the
-      // remaining q_events_*/q_stream_* block to finish in
-      streamLateFuture(s, dir)
       Map("tumbling" -> s.table(s"stream_tumbling_$n"),
         "dedup"    -> s.table(s"stream_dedup_$n"),
         "sessions" -> s.table(s"stream_sessions_$n"),
@@ -1798,23 +1648,11 @@ object SparkEntry {
         "join"     -> s.table(s"stream_join_$n"))
     }
 
-  /** Diagnostic hook for TmModCatProbe: the per-row (p, wm_id, orig_id, cat)
-    * frame the modify grid aggregates — lets a row-level DuckDB diff
-    * localize any category divergence to one (id, diff) pair.
-    */
-  private[graft] def dumpTmModCats(s: SparkSession, dir: String): DataFrame = {
-    val emb  = Tables.embeddings(s, dir)
-    val wmDf = TabularMark.embed(emb, tmKey)
-    val tagged = Attacks.attackGrid(wmDf, Seq("random_modify"), TmGridPs, TmModSeed, D, None)
-    TabularMark.matchedCatsTagged(emb, tagged, tmKey, Seq("p"))
-      .orderBy("p", "wm_id")
-  }
-
-  // ---- watermark-grid shared artifacts (r20) --------------------------
-  // The h_* grid queries' memoized frames, extracted into named builders so
-  // the background warm build (wmGridFuture) and the consuming queries
-  // force the SAME definitions — one body per memo key, no drift possible.
-  // Every body is byte-identical to the inline form it replaces.
+  // ---- watermark-grid shared artifacts ---------------------------------
+  // The h_* grid queries' checkpointed embed/ranking stages, one named
+  // memo per stage: the classify checkpoint, the per-rep deletion rankings
+  // and the corpus count serve several grids; the rest keep one grid's
+  // driver-serialized checkpoint chain out of its vote plan.
   /** The ONE per-pass classify checkpoint: h_impact_compare,
     * impact_embed_missfalse, h_impact_sweep, and the strength grid all
     * consume the identical Tvp.classify(emb, D, WM.length, key) frame —
@@ -1877,1168 +1715,6 @@ object SparkEntry {
     GraftCache.memo(s"$dir/tmmod-tagged") {
       Attacks.attackGrid(TabularMark.embed(Tables.embeddings(s, dir), tmKey),
         Seq("random_modify"), TmGridPs, TmModSeed, D, None).localCheckpoint()
-    }
-
-  /** Background warm build of the watermark-grid artifact chain — the same
-    * §2.6 across-query amortization as cdcLogFuture/nearDupPairsFuture,
-    * applied to the h_* grid family: the chains are driver-serialized
-    * eager-checkpoint builds that otherwise serialize inside their first
-    * consumers (h_rs_delete_grid, h_strength_grid, h_th_grid,
-    * h_tm_modify_grid), while the queries between the family's start and
-    * those consumers leave executors mostly idle. Kicked non-blocking by
-    * the family's first member (h_hitrate_curve); builds run in
-    * first-consumer order down the sorted family. Caller's session —
-    * nothing here mutates session conf. The work is still real and still
-    * inside the measured pass (the between-pass clear drops the memos);
-    * it just no longer serializes. The once-only memo holders make the
-    * race with an early-arriving foreground consumer compute-once: the
-    * consumer blocks on the in-flight build instead of duplicating it.
-    */
-  private def wmGridFuture(s: SparkSession, dir: String)
-      : java.util.concurrent.Future[Unit] =
-    ingestWarmLock.synchronized {
-      GraftCache.memoAny(s"$dir/wmgridfut") {
-        val fut = warmPool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            rsDelRanked(s, dir)       // h_rs_delete_grid (forces wm-rs too)
-            strgridWmAll(s, dir)      // h_strength_grid (forces cl + carriers)
-            strgridRankedAll(s, dir)
-            thWmAll(s, dir)           // h_th_grid (forces tvp-carriers-swept)
-            tmModTagged(s, dir)       // h_tm_modify_grid
-            // r20 wave 5: the merged after-kNN miss/false result — its
-            // consumer (impact_embed_missfalse) follows the h_ family
-            impactMissfalseShared(s, dir).count()
-            ()
-          }
-        })
-        GraftCache.onClear(() => { fut.cancel(true); () })
-        fut
-      }
-    }
-
-  // ---- graph-ANN acceptance gauges as shared memos (r20) ---------------
-  // Each gauge (a layered/flat search plus the recall join) was built
-  // per-call inside its query; memoizing the frame changes nothing for the
-  // single consumer but lets annGraphFuture warm it in the background.
-  private def gaugeBuildRecall(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/gauge-bld") {
-      val art = graphBuildDir(s, dir)
-      graphRecallGauge(s, dir,
-        ArtifactIO.readBucketed(s, s"$art/bldrep",
-          "src BIGINT, dst BIGINT, dist DOUBLE", "src", KnnGraph.EdgeBuckets),
-        ArtifactIO.readBucketed(s, s"$art/bldedges",
-          "src BIGINT, dst BIGINT, dist DOUBLE", "src", KnnGraph.EdgeBuckets))
-    }
-  private def gaugeDeleteRecall(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/gauge-del") {
-      val art = graphDeleteDir(s, dir)
-      val emb = Tables.embeddings(s, dir)
-      val survivors = emb.filter(!isDelVictim)
-      val dBase = ArtifactIO.readBucketed(s, s"$art/deledges",
-        "src BIGINT, dst BIGINT, dist DOUBLE", "src", KnnGraph.EdgeBuckets)
-      val dRep = ArtifactIO.readBucketed(s, s"$art/delrep",
-        "src BIGINT, dst BIGINT, dist DOUBLE", "src", KnnGraph.EdgeBuckets)
-      recallVs(
-        Knn.exact(emb.filter(col("vec_id") < 100), survivors, 10,
-          metric = "l2", kernel = "fold"),
-        GraphAnn.layeredSearch(emb.filter(col("vec_id") < 100),
-          embBucketed(s, dir), dRep, dBase,
-          GraphAnn.entryPoints(repsOf(survivors), GraphEntries),
-          k = 10, repBeam = RepBeam, baseBeam = BaseBeam,
-          repRounds = RepRounds, baseRounds = BaseRounds))
-    }
-  private def gaugeInsertRecall(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/gauge-ins") {
-      val art = graphInsertDir(s, dir)
-      graphRecallGauge(s, dir,
-        ArtifactIO.readBucketed(s, s"$art/inrep",
-          "src BIGINT, dst BIGINT, dist DOUBLE", "src", KnnGraph.EdgeBuckets),
-        ArtifactIO.readBucketed(s, s"$art/inedges",
-          "src BIGINT, dst BIGINT, dist DOUBLE", "src", KnnGraph.EdgeBuckets))
-    }
-  private def gaugeRefineRecall(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/gauge-ref") {
-      recallVs(rawKnn(s, dir).filter(col("query_id") < 100 && col("rank") <= 10),
-        GraphAnn.beamSearch(
-          Tables.embeddings(s, dir).filter(col("vec_id") < 100),
-          embBucketed(s, dir), graphRefinedShared(s, dir),
-          GraphAnn.entryPoints(Tables.embeddings(s, dir), GraphEntries),
-          k = 10, beam = GraphBeam, rounds = GraphRounds))
-    }
-  /** The N-scheduled (efSearch/rounds) standard-sample search — the
-    * ann_graph_topk_scaled body as a shared memo so the future can warm it.
-    */
-  private def graphScaledSearchShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/graphscaled") {
-      val emb = Tables.embeddings(s, dir)
-      val nCorpus = strgridN(s, dir) // the memoized emb.count()
-      val beam = GraphAnn.efSearch(nCorpus, 10)
-      val rounds = GraphAnn.searchRounds(nCorpus, 2 * M)
-      require(rounds == ScaledGraphRounds,
-        s"schedule gives $rounds rounds for N=$nCorpus but the oracle " +
-          s"unrolls $ScaledGraphRounds — regenerate the replay " +
-          "(ScaledGraphRounds) for this fixture size")
-      val (edgesDf, _) = KnnGraph.read(s, graphArtifactDir(s, dir))
-      GraphAnn.beamSearch(emb.filter(col("vec_id") < 100), embBucketed(s, dir),
-        edgesDf, GraphAnn.entryPoints(emb, GraphEntries),
-        k = 10, beam = beam, rounds = rounds)
-    }
-
-  /** Background warm build of the graph-ANN search memos (the widened-beam
-    * filtered traversal, the acceptance gauges, the flat/layered/scaled
-    * standard searches, the NN-descent-refined layer) — the wmGridFuture
-    * pattern applied to the ann_* family: each memoized search's beam
-    * rounds are lazily staged, so the first consumer otherwise pays the
-    * whole driver-serialized round chain; a count() here materializes the
-    * persisted frame on a background thread while the family's earlier
-    * members run. Items run in FIRST-CONSUMER order down the sorted family;
-    * a consumer that arrives before the future reaches its item just builds
-    * it in the foreground (status quo) and the future's later call returns
-    * from the memo instantly — the chain drains whatever slack exists, and
-    * can never add latency. Caller's session — nothing here mutates
-    * session conf.
-    */
-  private def annGraphFuture(s: SparkSession, dir: String)
-      : java.util.concurrent.Future[Unit] =
-    ingestWarmLock.synchronized {
-      GraftCache.memoAny(s"$dir/anngraphfut") {
-        // TWO chains on two warm threads: one serial chain proved too long
-        // (measured r20 — the gauges starved the later searches' warming,
-        // dropping ann_graph_refine/recall back to their foreground cost).
-        // Each chain is ordered by FIRST CONSUMER; the chains are mutually
-        // independent (gaugeRefineRecall's dependence on graphRefinedShared
-        // stays inside chain B).
-        val futA = warmPool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            filteredGraphCandShared(s, dir).count() // ann_filtered_graph_recall
-            gaugeBuildRecall(s, dir).count()        // ann_graph_build_recall
-            gaugeInsertRecall(s, dir).count()       // ann_graph_insert_recall
-            // r20 wave 5: chain A usually finishes well before chain B, so
-            // it races B to the scaled search (once-only memo — whichever
-            // thread frees first builds it) and then drains the crossmodal
-            // traversal, whose consumer sits past the dedup block
-            graphScaledSearchShared(s, dir).count() // ann_graph_topk_scaled
-            cmGraphShared(s, dir).count()           // crossmodal_graph_ann
-            ()
-          }
-        })
-        val futB = warmPool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            gaugeDeleteRecall(s, dir).count()       // ann_graph_delete_recall
-            graphAnnShared(s, dir).count()          // ann_graph_recall
-            graphAnnLayeredShared(s, dir).count()   // ann_graph_recall_layered
-            graphRefinedShared(s, dir).count()      // ann_graph_refine
-            gaugeRefineRecall(s, dir).count()       // ann_graph_refine_recall
-            graphScaledSearchShared(s, dir).count() // ann_graph_topk_scaled
-            ()
-          }
-        })
-        GraftCache.onClear(() => { futA.cancel(true); futB.cancel(true); () })
-        futA
-      }
-    }
-
-  /** The streaming-ingest acceptance gauge as a shared memo: the standard
-    * layered search over the final streamed-in graph. The memo body blocks
-    * on the ingest build's future, so the background warm thread
-    * (giRecallFuture) waits out the build and then materializes the gauge
-    * in the window before q_stream_graph_ingest_recall consumes it.
-    */
-  private def giRecallShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/girecall") {
-      val (layersT, _) = graphIngestShared(s, dir)
-      graphRecallGauge(s, dir,
-        layerOf(s, layersT, "rep"),
-        layerOf(s, layersT, "base"))
-    }
-  private def giRecallFuture(s: SparkSession, dir: String)
-      : java.util.concurrent.Future[Unit] =
-    ingestWarmLock.synchronized {
-      GraftCache.memoAny(s"$dir/girecallfut") {
-        val fut = warmPool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = { giRecallShared(s, dir).count(); () }
-        })
-        GraftCache.onClear(() => { fut.cancel(true); () })
-        fut
-      }
-    }
-
-  // ---- post-CDC warm chain (r20 wave 4) --------------------------------
-  // The CDC-derived IVM view folds and the late stream builds, extracted
-  // into named memoized builders so the background warm chain and the
-  // consuming queries force the SAME definitions (the wmGridFuture
-  // discipline — one body per memo key, no drift possible). Bodies are
-  // byte-identical to the inline forms they replace, except that stream
-  // cleanup now registers BEFORE the stream starts and stops in a finally
-  // (the graphIngestBuild pattern, per the r19 ADVICE) — these bodies can
-  // now be cancelled mid-build by the warm future's clear-time cancel.
-
-  /** q_events_ivm_catchup's result: bootstrap + one whole-backlog fold. */
-  private def ivmCatchupShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/ivmcatchupres") {
-      val table = cdcLogCompactedShared(s, dir) // v1–6
-      val n = streamSinkSeq.incrementAndGet()
-      val base = replayCkptBase(n)
-      val view = new java.io.File(base, "ivmcatchup").getAbsolutePath
-      GraftCache.onClear(() => rmTree(base))
-      val tick = graft.streaming.StreamOps.changeFeedIvm(table, view) _
-      tick(s.range(1).toDF(), 0L) // bootstrap + ONE folded step: v1 → v6
-      tick(s.range(1).toDF(), 1L) // already converged — must be a no-op
-      require(graft.sources.TableLog.headVersion(view) == 2,
-        "catch-up must converge the 5-version backlog in one tick")
-      (1 to 2).map { v =>
-        graft.sources.TableLog.read(s, view, Some(v))
-          .select(col("__v").as("version"), col("event_type"), col("n"),
-            col("sum_value_micros"))
-      }.reduce(_.unionByName(_)).orderBy("version", "event_type")
-    }
-
-  /** q_events_ivm_daily's result: the per-day rollup view. */
-  private def ivmDailyShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/ivmdailyres") {
-      val table = cdcLogCompactedShared(s, dir) // v1–6
-      val n = streamSinkSeq.incrementAndGet()
-      val base = replayCkptBase(n)
-      val view = new java.io.File(base, "ivmdaily").getAbsolutePath
-      GraftCache.onClear(() => rmTree(base))
-      import graft.streaming.StreamOps.{IvmCount, IvmSum}
-      val tick = graft.streaming.StreamOps.maintainView(table, view,
-        Seq("day"), Seq(IvmCount("n"), IvmSum("us", "sum_value_micros"))) _
-      tick(s.range(1).toDF(), 0L) // bootstrap + ONE folded step: v1 → v6
-      tick(s.range(1).toDF(), 1L) // already converged — must be a no-op
-      require(graft.sources.TableLog.headVersion(view) == 2,
-        "catch-up must converge the 5-version backlog in one tick")
-      (1 to 2).map { v =>
-        graft.sources.TableLog.read(s, view, Some(v))
-          // date_format like every other day-emitting query: the oracle's
-          // strftime is a VARCHAR, and the pandas read path renders a raw
-          // DATE as a midnight timestamp string (hash-mismatch)
-          .select(col("__v").as("version"),
-            date_format(col("day"), "yyyy-MM-dd").as("day"), col("n"),
-            col("sum_value_micros"))
-      }.reduce(_.unionByName(_)).orderBy("version", "day")
-    }
-
-  /** q_events_ivm_minmax's result: the MIN/MAX view with retraction rescan. */
-  private def ivmMinmaxShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/ivmminmaxres") {
-      val table = cdcLogCompactedShared(s, dir) // v1–6
-      val n = streamSinkSeq.incrementAndGet()
-      val base = replayCkptBase(n)
-      val view = new java.io.File(base, "ivmminmax").getAbsolutePath
-      GraftCache.onClear(() => rmTree(base))
-      import graft.streaming.StreamOps.{IvmCount, IvmMax, IvmMin}
-      val tick = graft.streaming.StreamOps.maintainView(table, view,
-        Seq("day"), Seq(IvmCount("n"), IvmMin("us", "min_value_micros"),
-          IvmMax("us", "max_value_micros"))) _
-      tick(s.range(1).toDF(), 0L) // bootstrap + ONE folded step: v1 → v6
-      tick(s.range(1).toDF(), 1L) // already converged — must be a no-op
-      require(graft.sources.TableLog.headVersion(view) == 2,
-        "catch-up must converge the 5-version backlog in one tick")
-      (1 to 2).map { v =>
-        graft.sources.TableLog.read(s, view, Some(v))
-          .select(col("__v").as("version"),
-            date_format(col("day"), "yyyy-MM-dd").as("day"), col("n"),
-            col("min_value_micros"), col("max_value_micros"))
-      }.reduce(_.unionByName(_)).orderBy("version", "day")
-    }
-
-  /** q_stream_changefeed_ivm's result: the 5-tick audit-mode replay. */
-  private def cfIvmShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/cfivmres") {
-      // v6: a compaction lands before the consumer catches up — its feed is
-      // empty and the maintained state must pass through unchanged
-      val table = cdcLogCompactedShared(s, dir)
-      val n = streamSinkSeq.incrementAndGet()
-      val base = replayCkptBase(n)
-      val view = new java.io.File(base, "ivmview").getAbsolutePath
-      GraftCache.onClear(() => rmTree(base))
-      withStreamShufflePartitions(s, 4) {
-        val replay = eventsCdcReplayDir(s, dir)
-        // consumer: the 5-file replay is only the TICK CLOCK here —
-        // 5 ticks walk the cursor v1 (bootstrap) → v6
-        val qc = s.readStream
-          .schema(s.read.option("pathGlobFilter", "*.parquet").parquet(replay).schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("latestFirst", "false")
-          .option("pathGlobFilter", "*.parquet")
-          .parquet(replay)
-          .writeStream
-          // auditing mode (1 source version per tick): this query's POINT is
-          // the version-by-version parity of the maintained history; the
-          // default whole-backlog catch-up is q_events_ivm_catchup's subject
-          .foreachBatch(
-            graft.streaming.StreamOps.changeFeedIvm(table, view,
-              maxVersionsPerTick = 1) _)
-          .option("checkpointLocation",
-            new java.io.File(base, "ivmcckpt").getAbsolutePath)
-          .start()
-        try qc.processAllAvailable() finally qc.stop()
-      }
-      (1 to graft.sources.TableLog.headVersion(view)).map { v =>
-        graft.sources.TableLog.read(s, view, Some(v))
-          .select(col("__v").as("version"), col("event_type"), col("n"),
-            col("sum_value_micros"))
-      }.reduce(_.unionByName(_)).orderBy("version", "event_type")
-    }
-
-  /** q_stream_ivf_ingest's result: 4-batch append ingest, then the search. */
-  private def ivfIngestShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/ivfingestres") {
-      val emb = Tables.embeddings(s, dir)
-      val (cents, _) = ivfDet(s, dir)
-      val n = streamSinkSeq.incrementAndGet()
-      val base = replayCkptBase(n)
-      val table = new java.io.File(base, "ivfingest").getAbsolutePath
-      GraftCache.onClear(() => rmTree(base))
-      withStreamShufflePartitions(s, 4) {
-        val replay = graft.streaming.StreamOps.multiBatchTableDir(
-          s, dir, "embeddings", Seq("vec_id"), 4)
-        val q = s.readStream
-          .schema(s.read.option("pathGlobFilter", "*.parquet").parquet(replay).schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("latestFirst", "false")
-          .option("pathGlobFilter", "*.parquet")
-          .parquet(replay)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val b = batch.select(col("vec_id"),
-              col("embedding").cast("array<float>").as("embedding"))
-            graft.sources.TableLog.append(
-              Ann.ivfDetAssign(b, cents).select("vec_id", "embedding", "cluster"),
-              table)
-            ()
-          }
-          .option("checkpointLocation",
-            new java.io.File(base, "ivfingestckpt").getAbsolutePath)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      require(graft.sources.TableLog.headVersion(table) == 4,
-        "the 4-batch replay must land exactly 4 append commits")
-      val idx = graft.sources.TableLog.read(s, table)
-      Ann.ivfDetSearch(emb.filter(col("vec_id") < 100), idx, cents,
-          k = 10, nprobe = 4)
-        .select(col("query_id"), col("neighbor_id"), col("rank").cast("long"))
-        .orderBy("query_id", "rank")
-    }
-
-  /** q_stream_upsert's result: the raw-parquet dynamic-overwrite merge. */
-  private def upsertRawShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/upsertrawres") {
-      val n = streamSinkSeq.incrementAndGet()
-      val base = replayCkptBase(n)
-      val target = new java.io.File(base, "upsert").getAbsolutePath
-      GraftCache.onClear(() => rmTree(base))
-      val prevMode = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        withStreamShufflePartitions(s, 4) {
-          val dayIdx = expr("cast(if(ts_ns >= 0, ts_ns div 86400000000000, " +
-            "-((-ts_ns + 86400000000000 - 1) div 86400000000000)) as int)")
-          val src = graft.streaming.StreamOps.eventsStreamBatched(s, dir)
-            .withColumn("__dup", explode(array(lit(0), lit(1)))).drop("__dup")
-            .select(col("event_id"), col("ts_ns"),
-              date_add(lit("1970-01-01").cast("date"), dayIdx).as("day"),
-              col("event_type"), micros(col("value")).as("us"))
-          val q = src.writeStream
-            .foreachBatch(graft.streaming.StreamOps.upsertBatch(target) _)
-            .option("checkpointLocation",
-              new java.io.File(base, "upsertckpt").getAbsolutePath)
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
-      } finally prevMode match {
-        case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None    => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      s.read.option("basePath", target).parquet(target)
-        .groupBy("day")
-        .agg(count(lit(1)).as("n"), sum("us").as("sum_value_micros"))
-        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-          col("n"), col("sum_value_micros"))
-        .orderBy("day")
-    }
-
-  /** q_stream_upsert_log's result: the same merge through the manifest log. */
-  private def upsertLogShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/upsertlogres") {
-      val n = streamSinkSeq.incrementAndGet()
-      val base = replayCkptBase(n)
-      val table = new java.io.File(base, "upsertlog").getAbsolutePath
-      GraftCache.onClear(() => rmTree(base))
-      withStreamShufflePartitions(s, 4) {
-        val dayIdx = expr("cast(if(ts_ns >= 0, ts_ns div 86400000000000, " +
-          "-((-ts_ns + 86400000000000 - 1) div 86400000000000)) as int)")
-        val src = graft.streaming.StreamOps.eventsStreamBatched(s, dir)
-          .withColumn("__dup", explode(array(lit(0), lit(1)))).drop("__dup")
-          .select(col("event_id"), col("ts_ns"),
-            date_add(lit("1970-01-01").cast("date"), dayIdx).as("day"),
-            col("event_type"), micros(col("value")).as("us"))
-        val q = src.writeStream
-          .foreachBatch(graft.streaming.StreamOps.upsertBatchLog(table) _)
-          .option("checkpointLocation",
-            new java.io.File(base, "upsertlogckpt").getAbsolutePath)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      graft.sources.TableLog.read(s, table)
-        .groupBy("day")
-        .agg(count(lit(1)).as("n"), sum("us").as("sum_value_micros"))
-        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-          col("n"), col("sum_value_micros"))
-        .orderBy("day")
-    }
-
-  /** Post-CDC warm chain: the three IVM view folds build on a warm thread
-    * as soon as the CDC table lands (their first consumers sit a dozen
-    * queries after the CDC block), then the stream trio's own future is
-    * kicked — ONE background build at a time, in first-consumer order, so
-    * the covered window pays a single thread of contention. Kicked from
-    * cdcLogTableBuild's tail where the trio kick used to sit.
-    */
-  private def postCdcFuture(s: SparkSession, dir: String)
-      : java.util.concurrent.Future[Unit] =
-    ingestWarmLock.synchronized {
-      GraftCache.memoAny(s"$dir/postcdcfut") {
-        val fut = warmPool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            // kick the sibling ladders FIRST (non-blocking): wave 5 made
-            // this chain longer (sessionsBucketed), and a trio/late-chain
-            // start delayed behind it cost q_stream_upsert_log its warm
-            // window (measured +1.8 s). The CDC table is already built
-            // here, so the late chain's change-feed head has its input;
-            // three short-lived warm threads overlap the cheap q_events_*
-            // block instead of serializing past their consumers.
-            streamTrioFuture(s, dir)
-            streamLateFuture(s, dir)
-            ivmCatchupShared(s, dir).count()
-            ivmDailyShared(s, dir).count()
-            ivmMinmaxShared(s, dir).count()
-            sessionsBucketedShared(s, dir).count()
-            ()
-          }
-        })
-        GraftCache.onClear(() => { fut.cancel(true); () })
-        fut
-      }
-    }
-
-  /** Late stream builds (change-feed IVM audit, IVF ingest, the two upsert
-    * merges), chained behind the trio — their consumers are the last
-    * q_stream_* queries of a pass, so the serialized chain has the whole
-    * q_events_ and q_stream_ block to finish in. Own CLONED session: every
-    * body mutates session conf (withStreamShufflePartitions, the raw
-    * upsert's partitionOverwriteMode). A consumer arriving first builds in
-    * the foreground on its own session (status quo) and the chain's later
-    * call returns from the memo instantly — the chain drains slack and can
-    * never add latency.
-    */
-  private def streamLateFuture(s: SparkSession, dir: String)
-      : java.util.concurrent.Future[Unit] =
-    ingestWarmLock.synchronized {
-      GraftCache.memoAny(s"$dir/streamlatefut") {
-        val bg = s.newSession()
-        val fut = warmPool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            cfIvmShared(bg, dir).count()
-            ivfIngestShared(bg, dir).count()
-            upsertRawShared(bg, dir).count()
-            upsertLogShared(bg, dir).count()
-            // r20 wave 5: the two set-overlap counts and the AND-semantics
-            // BM25 top-k sit past the whole q_* block — the chain's tail
-            // drains them in first-consumer order (so3 < so4 < text_*)
-            so3Shared(bg, dir).count()      // so3_overlap_modify
-            so4Shared(bg, dir).count()      // so4_hidden_overlap
-            bm25AndShared(bg, dir).count()  // text_bm25_and_topk
-          }
-        })
-        GraftCache.onClear(() => { fut.cancel(true); () })
-        fut
-      }
-    }
-
-  // ---- wave-5 shared results (r20) --------------------------------------
-  // More single-consumer query bodies extracted into memos so the existing
-  // warm chains can drain them in the background (same discipline: bodies
-  // byte-identical to the inline forms; the query wrappers keep their
-  // non-blocking future kicks so pass scheduling is unchanged).
-
-  /** attack_hit_rate's result: full kNN vs the deleted corpus + counts. */
-  private def attackHitRateShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/attackhitrate") {
-      import s.implicits._
-      val emb   = Tables.embeddings(s, dir)
-      val base  = rawKnn(s, dir).filter(col("rank") <= 10)
-      val att   = Attacks.randomDelete(emb, DeleteP, Seed)
-      val after = Knn.exact(emb, att, 10, kernel = "fold")
-      val nq    = base.select("query_id").distinct().count()
-      val nCommon = base.select("query_id", "neighbor_id")
-        .join(after.select("query_id", "neighbor_id"), Seq("query_id", "neighbor_id"), "left_semi")
-        .count()
-      Seq((nCommon, nq, 10L)).toDF("n_common", "n_queries", "k")
-    }
-
-  /** h_hitrate_curve's result: the 9-cell deletion curve off one grouped
-    * kNN pass (the wmGridFuture kick stays in the query wrapper).
-    */
-  private def hitrateCurveShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/hitratecurve") {
-      import s.implicits._
-      val emb  = Tables.embeddings(s, dir)
-      val base = rawKnn(s, dir).filter(col("rank") <= 10)
-      val ps   = (1 to 9).map(_ / 10.0)
-      val aiDf = ai(s, dir)
-      // ONE ai ranking serves every cutoff (identical keep-sets to
-      // Attacks.adaptiveDelete's per-cell two-pass selection: rank order is
-      // (ai desc, vec_id), kept = rank > ceil(n·p))
-      val ranked = GraftCache.memo(s"$dir/hitrate-airank") {
-        Attacks.scoreRanked(emb.join(aiDf, "vec_id").select(col("vec_id"), col("ai")), "ai")
-          .select(col("vec_id"), col("__grank")).localCheckpoint()
-      }
-      val n0 = GraftCache.memoAny(s"$dir/strgrid-n") { emb.count() }
-      val embR = emb.join(ranked, "vec_id")
-      val keptAll = ps.map(p => embR
-          .filter(col("__grank") > ceil(lit(n0.toDouble) * lit(p)).cast("long"))
-          .select(col("vec_id"), col("embedding")).withColumn("p", lit(p)))
-        .reduce(_ unionByName _).localCheckpoint()
-      val qAll = ps.map(p => emb.select(col("vec_id"), col("embedding"))
-          .withColumn("p", lit(p))).reduce(_ unionByName _)
-      val after = Knn.exactGrouped(qAll, keptAll, 10, "p", kernel = "fold")
-      val nq = GraftCache.memoAny(s"$dir/strgrid-n") { emb.count() }
-      val common = after.select(col("p"), col("query_id"), col("neighbor_id"))
-        .join(base.select(col("query_id"), col("neighbor_id")),
-          Seq("query_id", "neighbor_id"), "left_semi")
-        .groupBy("p").agg(count(lit(1)).as("n_common"))
-      ps.toDF("p").join(common, Seq("p"), "left")
-        .select(col("p"), coalesce(col("n_common"), lit(0L)).as("n_common"),
-          lit(nq).as("n_queries"), lit(10L).as("k"),
-          (coalesce(col("n_common"), lit(0L)).cast("double") / (lit(nq.toDouble) * 10.0)).as("hit_rate"))
-        .orderBy("p")
-    }
-
-  /** dedup_cross_neardup's result (the broadcast decontamination regime;
-    * the nearDupPairsFuture kick stays in the query wrapper).
-    */
-  private def crossNearDupShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/crossnd") {
-      val docs = Tables.documents(s, dir)
-      Dedup.crossNearDups(
-          docs.filter(pmod(col("doc_id"), lit(100)) =!= 7),
-          docs.filter(pmod(col("doc_id"), lit(100)) === 7), threshold = 0.5)
-        .orderBy("a", "b")
-    }
-
-  /** dedup_cross_neardup_large's result (shuffle-hash candidate join). */
-  private def crossNearDupLargeShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/crossndlarge") {
-      val docs = Tables.documents(s, dir)
-      Dedup.crossNearDups(
-          docs.filter(pmod(col("doc_id"), lit(100)) =!= 7),
-          docs.filter(pmod(col("doc_id"), lit(100)) === 7), threshold = 0.5,
-          broadcastBench = false)
-        .orderBy("a", "b")
-    }
-
-  /** crossmodal_graph_ann's result: out-of-corpus probes through the
-    * persisted kNN-edge artifact's beam search.
-    */
-  private def cmGraphShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/cmgraph") {
-      val emb = Tables.embeddings(s, dir)
-      val (edgesDf, _) = KnnGraph.read(s, graphArtifactDir(s, dir))
-      GraphAnn.beamSearch(assetProbes(s, dir), embBucketed(s, dir), edgesDf,
-          GraphAnn.entryPoints(emb, GraphEntries),
-          k = 5, beam = GraphBeam, rounds = GraphRounds)
-        .select(col("query_id").as("asset_id"), col("neighbor_id"),
-          col("rank").cast("long"))
-        .orderBy("asset_id", "rank")
-    }
-
-  /** impact_embed_missfalse's result: merged after-kNN miss/false averages. */
-  private def impactMissfalseShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/impactmf") {
-      val emb  = Tables.embeddings(s, dir)
-      val base = rawKnn(s, dir).filter(col("rank") <= 10)
-      // classify + RS carrier selection are bit-identical to
-      // h_impact_compare's — share its memo keys so whichever query runs
-      // first pays the window/checkpoint build and the other rides the cache
-      val cl   = classifiedShared(s, dir)
-      val carriers = GraftCache.memo(s"$dir/impcmp-rsc") {
-        Tvp.carriersRs(cl, Tvp.bitsDf(s, WM), Strength, key.seed).localCheckpoint()
-      }
-      val wmDf  = Tvp.applyEmbed(emb, carriers, D, key)
-      // after-kNN merged from the shared base pass + a pass over just the
-      // modified carrier rows (bit-identical to a full recompute — see
-      // Knn.topKAfterModify)
-      val mod = wmDf.select(col("vec_id"), col("embedding"))
-        .join(broadcast(carriers.select(col("vec_id"))), Seq("vec_id"), "left_semi")
-      val after = Knn.topKAfterModify(emb, emb, rawKnn(s, dir), mod, 10)
-      val mf = Metrics.missFalse(
-        Metrics.carrierHits(base, carriers),
-        Metrics.carrierHits(after, carriers))
-      mf.agg(
-        round(avg("miss"), 6).as("avg_miss"),
-        round(avg("false_hits"), 6).as("avg_false"),
-        count(lit(1)).as("n_carriers"))
-    }
-
-  /** so3_overlap_modify's result: distinct-vector set overlap counts. */
-  private def so3Shared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/so3res") {
-      import s.implicits._
-      val emb = Tables.embeddings(s, dir)
-      val a = emb.select("embedding").distinct()
-      val b = Attacks.randomModify(emb, 0.2, D, Seed).select("embedding").distinct()
-      val ninter = a.intersect(b).count()
-      val nunion = a.union(b).distinct().count()
-      Seq((ninter, nunion)).toDF("n_intersect", "n_union")
-    }
-
-  /** so4_hidden_overlap's result: bottom-10% overlap of M=8 vs M=12 graphs. */
-  private def so4Shared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/so4res") {
-      import s.implicits._
-      val emb = Tables.embeddings(s, dir)
-      def hidden(m: Int): org.apache.spark.sql.DataFrame = {
-        val raw = GraftCache.memo(s"$dir/rawknn-m$m") {
-          KnnGraph.rawKnn(emb, 2 * m + 1)
-        }
-        val qc = KnnGraph.queryCounts(emb, raw, k = 10)
-        val n  = qc.count()
-        qc.orderBy(col("query_count"), col("vec_id")).limit(math.ceil(n * 0.1).toInt)
-          .select("vec_id")
-      }
-      val base  = hidden(8).cache()
-      val other = hidden(12)
-      val nb    = base.count()
-      val ni    = base.intersect(other).count()
-      base.unpersist() // both consumers ran; a bare cache() outlives clear()
-      Seq((nb, ni, ni.toDouble / nb)).toDF("n_base", "n_intersect", "overlap")
-    }
-
-  /** q_events_sessions_bucketed's result. */
-  private def sessionsBucketedShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/sessbucketed") {
-      EventOps.sessionStatsBucketed(Tables.events(s, dir), gapSec = 1800,
-          bucketSec = 21600L)
-        .select("user_id", "session_seq", "n_events", "start_es", "end_es",
-          "sum_value_micros", "duration_sec")
-        .orderBy("user_id", "session_seq")
-    }
-
-  /** text_bm25_and_topk's result: the AND-semantics ranked top-k. */
-  private def bm25AndShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/bm25and") {
-      import s.implicits._
-      val arity = bm25Queries.toDF("query_id", "term")
-        .groupBy("query_id").agg(count(lit(1)).as("q_terms"))
-      val scored = bm25ScoredShared(s, dir)
-        .join(broadcast(arity), "query_id")
-        .filter(col("n_terms") === col("q_terms"))
-        .drop("q_terms")
-      Bm25.topK(scored, k = 10)
-        .select(col("query_id"), col("rank"), col("doc_id"),
-          col("n_terms"), col("score_micros"))
-        .orderBy("query_id", "rank")
-    }
-
-  /** pipeline_clean_corpus's result (the cdcLogFuture/giRecallFuture kicks
-    * stay in the query wrapper — they anchor the pass's warm scheduling).
-    */
-  private def pipelineCleanShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/pipelineclean") {
-      val docs = Tables.documents(s, dir)
-      // stages that feed MULTIPLE downstream consumers are localCheckpointed
-      // once (e: bands + verify shingles + anti-join left; nd: contamination
-      // probe + anti-join left); single-consumer stages stay lazy — and the
-      // five stage counts union into ONE aggregation job instead of five
-      // count actions (a fixture-scale composition pays mostly per-job
-      // overhead; at 100 TB the same fused plan just runs wider)
-      val q = docs.filter(TextOps.qualityScore(col("text")) >= 0.8)
-      val e = GraftCache.stage(Dedup.dropExactDups(q))
-      // near-dup pairs of the cleaned subset = the SHARED full-corpus pair
-      // frame restricted to both endpoints ∈ e: every step of the pair
-      // derivation is per-doc or pairwise (MinHash signature and band keys
-      // are functions of one doc's text; candidacy is band-bucket equality
-      // of a pair; the verify is the pair's exact shingle Jaccard), so
-      // restriction commutes with the computation — r20 swaps the second
-      // band+verify pass over e for two semi-joins against the memoized
-      // frame the dedup family already warm-built (oracle unchanged and
-      // re-verified at sf0.001/0.01/0.1: the replay still derives pairs
-      // from ed directly)
-      val eIds = e.select("doc_id")
-      val ndRemove = nearDupPairsShared(s, dir)
-        .join(eIds.withColumnRenamed("doc_id", "a"), Seq("a"), "left_semi")
-        .join(eIds.withColumnRenamed("doc_id", "b"), Seq("b"), "left_semi")
-        .select(col("b").as("doc_id")).distinct()
-      val nd = GraftCache.stage(e.join(ndRemove, Seq("doc_id"), "left_anti"))
-      val bench = docs.filter(pmod(col("doc_id"), lit(100)) === 7)
-      val scan  = nd.filter(pmod(col("doc_id"), lit(100)) =!= 7)
-      val fin = scan.join(
-        Dedup.contamination(scan, bench, 4).select("doc_id"),
-        Seq("doc_id"), "left_anti")
-      Seq(
-        (0L, "input", docs),
-        (1L, "quality", q),
-        (2L, "exact_dedup", e),
-        (3L, "near_dup", nd),
-        (4L, "decontaminated", fin))
-        .map { case (i, nm, df) =>
-          df.agg(count(lit(1)).as("n_docs"))
-            .select(lit(i).as("stage_id"), lit(nm).as("stage"), col("n_docs"))
-        }
-        .reduce(_ unionByName _)
-        .orderBy("stage_id")
-    }
-
-  /** pipeline_mix_dedup's result: keep-best dedup + sqrt-temperature
-    * quota draw (the |sources|-row apportionment collect runs inside).
-    */
-  private def pipelineMixShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/pipelinemix") {
-      val kTotal = 120.0
-      val docs = Tables.documents(s, dir)
-      val clusters = Dedup.nearDupClustersFromPairs(nearDupPairsShared(s, dir))
-      val qus = docs.select(col("doc_id"),
-        micros(TextOps.qualityScore(col("text"))).as("q_us"))
-      val best = clusters.join(qus, "doc_id")
-        .groupBy("canonical_id")
-        .agg(max(struct(col("q_us"), (-col("doc_id")).as("nid"))).as("__b"))
-        .select((-col("__b.nid")).as("doc_id"))
-      val keptIds = docs.select("doc_id")
-        .join(clusters.select("doc_id"), Seq("doc_id"), "left_anti")
-        .unionByName(best)
-      // checkpointed once: feeds the bounded quota collect AND the draw
-      val kept = GraftCache.stage(docs.join(keptIds, "doc_id"))
-      // |sources| rows driver-side — identical apportionment arithmetic to
-      // sample_mixture_sqrt, over the deduplicated counts
-      val rows = kept.groupBy("source").agg(count(lit(1)).as("n"))
-        .orderBy("source").collect()
-        .map(r => (r.getString(0), r.getLong(1), math.sqrt(r.getLong(1).toDouble)))
-      val bigW = rows.foldLeft(0.0)((a, r) => a + r._3)
-      val base = rows.map { case (src, n, w) =>
-        (src, n, math.floor(kTotal * w / bigW).toLong,
-          kTotal * w / bigW - math.floor(kTotal * w / bigW))
-      }
-      val rem = (kTotal - base.map(_._3).sum).toInt
-      val extras = base.sortBy { case (src, _, _, frac) => (-frac, src) }
-        .take(rem).map(_._1).toSet
-      import s.implicits._
-      val quotaDf = base.map { case (src, n, b, _) =>
-        (src, n, b + (if (extras.contains(src)) 1L else 0L))
-      }.toSeq.toDF("source", "n_kept", "quota")
-      val u = graft.text.Sample.unitCol(
-        concat(lit("mixdd|"), col("doc_id").cast("string")))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("source")
-        .orderBy(col("__pri").desc, col("doc_id"))
-      val sampled = kept
-        .withColumn("__pri", TextOps.qualityScore(col("text")) / u)
-        .withColumn("__rn", row_number().over(w))
-        .join(broadcast(quotaDf.select("source", "quota")), "source")
-        .filter(col("__rn") <= col("quota"))
-      quotaDf.join(
-          sampled.groupBy("source").agg(count(lit(1)).as("n_sampled"),
-            min("doc_id").as("first_doc"), max("doc_id").as("last_doc"),
-            sum("doc_id").as("sum_doc_ids"),
-            sum(micros(TextOps.qualityScore(col("text")))).as("sum_q_us")),
-          Seq("source"), "left")
-        .select(col("source"), col("n_kept"), col("quota"),
-          coalesce(col("n_sampled"), lit(0L)).as("n_sampled"),
-          coalesce(col("first_doc"), lit(-1L)).as("first_doc"),
-          coalesce(col("last_doc"), lit(-1L)).as("last_doc"),
-          coalesce(col("sum_doc_ids"), lit(-1L)).as("sum_doc_ids"),
-          coalesce(col("sum_q_us"), lit(-1L)).as("sum_q_us"))
-        .orderBy("source")
-    }
-
-  /** dedup_jaccard_pairs' result: the exact PPJoin prefix-filter pass. */
-  private def jaccardPairsShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/jaccpairs") {
-      Dedup.jaccardPairs(Tables.documents(s, dir), threshold = 0.4)
-        .orderBy("a", "b")
-    }
-
-  /** graph_components_undirected's result: star-contraction CC + sizes. */
-  private def componentsShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/ccres") {
-      val nodes = Tables.embeddings(s, dir).select("vec_id")
-      val cc = KnnGraph.componentsUndirected(edges(s, dir).select("src", "dst"))
-      nodes.join(cc, Seq("vec_id"), "left")
-        .select(col("vec_id"), coalesce(col("comp"), col("vec_id")).as("comp"))
-        .groupBy("comp").agg(count(lit(1)).as("n_nodes"))
-        .orderBy("comp")
-    }
-
-  /** graph_pagerank's result: 3 scaled-integer rounds, top-20. */
-  private def pagerankShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/pagerankres") {
-      val (e0, _) = KnnGraph.read(s, graphArtifactDir(s, dir))
-      val e = e0.select("src", "dst")
-      val deg = e.groupBy("src").agg(count(lit(1)).as("od"))
-      val nodes = Tables.embeddings(s, dir).select("vec_id")
-      var rank = nodes.withColumn("r", lit(1000000000000L))
-      (1 to 3).foreach { _ =>
-        val contrib = e.join(deg, "src")
-          .join(rank.withColumnRenamed("vec_id", "src"), "src")
-          .select(col("dst").as("vec_id"), expr("r div od").as("c"))
-          .groupBy("vec_id").agg(sum("c").as("c"))
-        rank = nodes.join(contrib, Seq("vec_id"), "left")
-          .select(col("vec_id"),
-            expr("cast(150000000000 as bigint) + (85 * coalesce(c, 0)) div 100")
-              .as("r"))
-      }
-      rank.select(col("vec_id"), col("r").as("rank_scaled"))
-        .orderBy(col("rank_scaled").desc, col("vec_id")).limit(20)
-    }
-
-  /** graph_triangles' result: mutual-edge wedge closure, top-10 corners. */
-  private def trianglesShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/trianglesres") {
-      val (e0, _) = KnnGraph.read(s, graphArtifactDir(s, dir))
-      val e = e0.select("src", "dst")
-      val mutual = e.as("x").join(e.as("y"),
-          col("x.src") === col("y.dst") && col("x.dst") === col("y.src"))
-        .select(col("x.src").as("a"), col("x.dst").as("b"))
-        .filter(col("a") < col("b")).distinct()
-      val tri = mutual.as("ab")
-        .join(mutual.as("bc"), col("ab.b") === col("bc.a"))
-        .join(mutual.as("ac"),
-          col("ac.a") === col("ab.a") && col("ac.b") === col("bc.b"))
-        .select(col("ab.a"), col("ab.b"), col("bc.b").as("c"))
-      tri.select(explode(array(col("a"), col("b"), col("c"))).as("vec_id"))
-        .groupBy("vec_id").agg(count(lit(1)).as("n_triangles"))
-        .orderBy(col("n_triangles").desc, col("vec_id")).limit(10)
-    }
-
-  /** q_events_asof_bucketed's result: the bucketed backward as-of rollup. */
-  private def asofBucketedShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/asofbucketed") {
-      val ev = Tables.events(s, dir).select("user_id", "ts_ns", "event_id")
-      val dim = Tables.events(s, dir)
-        .filter(col("event_type") === "signup")
-        .groupBy("user_id", "ts_ns")
-        .agg(max(micros(col("value"))).as("signup_val_us"))
-      AsOfJoin.backwardBucketed(ev, dim, "user_id", "ts_ns",
-          Seq("signup_val_us"), bucketWidth = 86400000000000L)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_events"),
-          sum(when(col("signup_val_us").isNotNull, 1L).otherwise(0L))
-            .as("n_matched"),
-          coalesce(sum("signup_val_us"), lit(0L)).as("sm_signup"))
-        .orderBy("user_id")
-    }
-
-  /** h_impact_compare's result: the four-scheme miss/false comparison off
-    * the merged after-kNN (the forked carrier checkpoints, the short-scheme
-    * exactness guard, and the grouped metrics fold all run inside).
-    */
-  private def impactCompareShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/impcmpres") {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import s.implicits._
-      val emb  = Tables.embeddings(s, dir)
-      val raw  = rawKnn(s, dir)
-      val base = raw.filter(col("rank") <= 10)
-      // classify feeds BOTH carrier selections below — the one shared
-      // checkpoint (classifiedShared) so no consumer recomputes the
-      // content-id/md5 expression chain
-      val cl   = classifiedShared(s, dir)
-      val bits = Tvp.bitsDf(s, WM)
-      val aiDf = ai(s, dir) // force the shared memo before forking
-      // each carrier frame feeds both its embed branch and the hit
-      // accounting — checkpoint once instead of re-running the selection
-      // windows per reference. The three selections are independent job
-      // chains on a mostly-idle local[32]; forking them overlaps their
-      // scheduling + window latencies (distinct memo keys, so the concurrent
-      // getOrElseUpdate races are harmless)
-      val fRs = Future(GraftCache.memo(s"$dir/impcmp-rsc") {
-        Tvp.carriersRs(cl, bits, Strength, key.seed).localCheckpoint()
-      })
-      val fTv = Future(GraftCache.memo(s"$dir/impcmp-tvc") {
-        Tvp.carriersAi(cl, bits, Strength, 0.1, aiDf).localCheckpoint()
-      })
-      val fSc = Future(GraftCache.memo(s"$dir/impcmp-scc") {
-        Scpw.carriers(emb, WM, Strength, scpwKey).localCheckpoint()
-      })
-      val fPrep = Future(GraftCache.memoAny(s"$dir/scpw-prep") {
-        Scpw.prepare(emb, scpwKey)
-      })
-      val rsC = Await.result(fRs, Duration.Inf)
-      val tvC = Await.result(fTv, Duration.Inf)
-      val scC = Await.result(fSc, Duration.Inf)
-      val scpwPrep = Await.result(fPrep, Duration.Inf)
-      val cases = Seq(
-        ("rs",  Tvp.applyEmbed(emb, rsC, D, key), rsC.select("vec_id")),
-        ("tvp", Tvp.applyEmbed(emb, tvC, D, key), tvC.select("vec_id")),
-        ("tm",  TabularMark.embed(emb, tmKey),
-          emb.filter(col("vec_id") < tmKey.nw).select("vec_id")),
-        ("scpw", Scpw.embed(emb, WM, Strength, scpwKey, Some(scC), Some(scpwPrep)),
-          scC.select("vec_id")))
-      val tagOf   = cases.map(_._1).zipWithIndex.toMap
-      val schemes = cases.map { case (n, _, _) => (n, tagOf(n)) }
-        .toDF("scheme", "sch")
-      // Each scheme's embedding only REPLACES its carrier rows, so its
-      // after-kNN is MERGED from the shared base pass: per (scheme, query),
-      // top-10 of (base top-17 minus that scheme's modified ids) ∪ one tiny
-      // grouped pass against just the modified rows. Bit-identical to the
-      // full 4×|corpus|² grouped recompute the oracle replays (unmodified
-      // rows keep their base fold distances; a query left with < 10
-      // unmodified survivors would make the merge lossy, and that case
-      // fails LOUDLY via an in-plan assert — see the witness below), at
-      // |corpus|·|carriers| cost: the scale shape for a 100 TB corpus with
-      // a few thousand carriers.
-      val modAll = cases.map { case (n, wmDf, ids) =>
-        wmDf.select(col("vec_id"), col("embedding"))
-          .join(broadcast(ids), Seq("vec_id"), "left_semi")
-          .withColumn("sch", lit(tagOf(n)))
-      }.reduce(_ unionByName _).transform(GraftCache.stage)
-      val qAll = cases.map { case (n, _, _) =>
-        emb.select(col("vec_id"), col("embedding")).withColumn("sch", lit(tagOf(n)))
-      }.reduce(_ unionByName _)
-      val modIds = modAll.select(col("sch").as("msch"), col("vec_id").as("mid"))
-      val rawTag = cases.map { case (n, _, _) =>
-        raw.select(col("query_id"), col("neighbor_id"), col("dist"))
-          .withColumn("sch", lit(tagOf(n)))
-      }.reduce(_ unionByName _)
-      val surv = rawTag.join(broadcast(modIds),
-          col("sch") === col("msch") && col("neighbor_id") === col("mid"), "left_anti")
-      val modTop = Knn.exactGrouped(qAll, modAll, 10, "sch", kernel = "fold")
-        .select(col("sch"), col("query_id"), col("neighbor_id"), col("dist"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("sch"), col("query_id"))
-        .orderBy(col("dist"), col("neighbor_id"))
-      // Exactness guard: ONE flagged aggregate over the persisted raw frame
-      // finds schemes where some query keeps < 10 unmodified survivors in
-      // its base top-17 (real at small SF — TM's fixed 100-row set is 20% of
-      // the sf0.01 corpus). Those schemes take the full grouped recompute;
-      // the rest ride the merge. The guard scans raw ONCE (untagged) — not
-      // the 4× tagged union.
-      val modFlag = modAll.select(col("vec_id").as("__mid"), col("sch").as("__msch"))
-      val shortSchemes = raw
-        .join(broadcast(modFlag), col("neighbor_id") === col("__mid"))
-        .groupBy(col("__msch"), col("query_id")).agg(count(lit(1)).as("nmod"))
-        // base depth is rawKnn's 2*M+1 — derive, don't hardcode, so the
-        // guard tracks the depth if M ever changes
-        .filter(col("nmod") > lit(2 * M + 1 - 10))
-        .select("__msch").distinct().collect().map(_.getInt(0)).toSet
-      val merged = surv.unionByName(modTop)
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
-      val afterAll =
-        if (shortSchemes.isEmpty) merged
-        else {
-          val corpusShort = cases.collect {
-            case (n, wmDf, _) if shortSchemes(tagOf(n)) =>
-              wmDf.select(col("vec_id"), col("embedding"))
-                .withColumn("sch", lit(tagOf(n)))
-          }.reduce(_ unionByName _).localCheckpoint()
-          val qShort = qAll.filter(col("sch").isInCollection(shortSchemes))
-          merged.filter(!col("sch").isInCollection(shortSchemes))
-            .unionByName(
-              Knn.exactGrouped(qShort, corpusShort, 10, "sch", kernel = "fold"))
-        }
-      // ONE grouped metrics plan for all four schemes (tag-keyed carrier
-      // hits → full-outer miss/false fold → per-scheme averages)
-      val carrTag = cases.map { case (n, _, ids) =>
-        ids.withColumn("sch", lit(tagOf(n)))
-      }.reduce(_ unionByName _)
-        .select(col("sch").as("csch"), col("vec_id").as("cid"))
-      val hitsB = base.join(broadcast(carrTag), col("neighbor_id") === col("cid"))
-        .select(col("csch").as("sch"), col("cid").as("carrier"), col("query_id").as("query"))
-      val hitsA = afterAll.join(broadcast(carrTag),
-          col("sch") === col("csch") && col("neighbor_id") === col("cid"))
-        .select(col("sch"), col("cid").as("carrier"), col("query_id").as("query"))
-      hitsB.withColumn("in_base", lit(1))
-        .join(hitsA.withColumn("in_after", lit(1)),
-          Seq("sch", "carrier", "query"), "full_outer")
-        .groupBy("sch", "carrier")
-        .agg(
-          sum(when(col("in_base").isNotNull && col("in_after").isNull, 1)
-            .otherwise(0)).as("miss"),
-          sum(when(col("in_after").isNotNull && col("in_base").isNull, 1)
-            .otherwise(0)).as("false_hits"))
-        .groupBy("sch")
-        .agg(round(avg("miss"), 6).as("avg_miss"),
-          round(avg("false_hits"), 6).as("avg_false"),
-          count(lit(1)).as("n_carriers"))
-        .join(broadcast(schemes), "sch")
-        .select("scheme", "n_carriers", "avg_miss", "avg_false")
-        .orderBy("scheme")
-    }
-
-  /** h_robustness_grid's result: RS+TVP × five attacks × the 9-rate axis. */
-  private def robustnessGridShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/robgridres") {
-      Experiments.robustnessGrid(
-        Tables.embeddings(s, dir),
-        schemes = Seq(Experiments.SchemeRs, Experiments.SchemeTvp),
-        attacks = Seq("random_delete", "adaptive_delete", "random_modify",
-          "adaptive_modify", "insert"),
-        ps = RobGridPs, reps = 1,
-        wm = WM, strength = 0.7, th = 0.5, d = D, wmKey = key, scpwKey = scpwKey,
-        sharedAi = Some(ai(s, dir)))
-        .select(col("scheme"), col("attack"), col("p"), col("rep").cast("long"), col("ber"))
-        .orderBy("scheme", "attack", "p", "rep")
-    }
-
-  /** h_scpw_grid's result: the SCPW column of the scheme comparison. */
-  private def scpwGridShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/scpwgridres") {
-      Experiments.robustnessGrid(
-        Tables.embeddings(s, dir),
-        schemes = Seq(Experiments.SchemeScpw),
-        attacks = Seq("random_delete", "adaptive_delete", "random_modify",
-          "adaptive_modify", "insert"),
-        ps = RobGridPs, reps = 1,
-        wm = WM, strength = 0.7, th = 0.5, d = D, wmKey = key, scpwKey = scpwKey,
-        sharedAi = Some(ai(s, dir)),
-        // the pool + noise constants are strength-independent — ride the
-        // memo the other SCPW queries share instead of re-collecting the
-        // pool and stats aggregate every bench pass
-        sharedScpwPrep = Some(GraftCache.memoAny(s"$dir/scpw-prep") {
-          Scpw.prepare(Tables.embeddings(s, dir), scpwKey)
-        }))
-        .select(col("scheme"), col("attack"), col("p"), col("rep").cast("long"), col("ber"))
-        .orderBy("scheme", "attack", "p", "rep")
-    }
-
-  /** h_quality_curve's result: the published TVP adaptive-delete curve. */
-  private def qualityCurveShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/qcurveres") {
-      Experiments.robustnessGrid(
-        Tables.embeddings(s, dir),
-        schemes = Seq(Experiments.SchemeTvp),
-        attacks = Seq("adaptive_delete"),
-        ps = CurvePs, reps = 1,
-        wm = CurveWm, strength = 0.54, th = 1.0, d = D, wmKey = key,
-        scpwKey = scpwKey, sharedAi = Some(ai(s, dir)))
-        .select(col("p"), col("ber"))
-        .orderBy("p")
-    }
-
-  /** h_quality_curve_rand's result: the 10-rep random-delete curve. */
-  private def qualityCurveRandShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/qcurverandres") {
-      Experiments.randomDeleteRepCurve(
-        Tables.embeddings(s, dir),
-        scheme = Experiments.SchemeTvp,
-        ps = CurvePs, reps = CurveReps,
-        wm = CurveWm, strength = 0.54, th = 1.0, d = D, wmKey = key,
-        scpwKey = scpwKey, sharedAi = Some(ai(s, dir)))
-        .select(col("p"), col("rep").cast("long"), col("ber"))
-        .orderBy("p", "rep")
-    }
-
-  /** h_impact_sweep's result: the 10-threshold carrier sweep. */
-  private def impactSweepShared(s: SparkSession, dir: String): DataFrame =
-    GraftCache.memo(s"$dir/impsweepres") {
-      Experiments.impactSweep(Tables.embeddings(s, dir),
-        ths = (1 to 10).map(_ / 10.0), WM, Strength, k = 10, d = D, wmKey = key,
-        sharedRaw = Some(rawKnn(s, dir)), sharedAi = Some(ai(s, dir)),
-        // bit-identical to h_impact_compare's classify — the one shared
-        // checkpoint (classifiedShared); whichever consumer runs first pays
-        // the window/checkpoint build
-        sharedClassified = Some(classifiedShared(s, dir)))
-        .select(col("th"), col("n_carriers"),
-          round(col("avg_miss"), 6).as("avg_miss"),
-          round(col("avg_false"), 6).as("avg_false"),
-          round(col("traffic_before"), 6).as("traffic_before"),
-          round(col("traffic_after"), 6).as("traffic_after"))
-        .orderBy("th")
-    }
-
-  /** Warm chain for the scheme-comparison pair — the two largest remaining
-    * sequential builds (classify → carriers → merged after-kNN → metrics,
-    * ~8 s combined). Kicked at the dedup family's head: their consumers
-    * (h_impact_compare/h_impact_sweep) sit ~20 queries later, past the
-    * dedup and graph families.
-    */
-  private def impactFuture(s: SparkSession, dir: String)
-      : java.util.concurrent.Future[Unit] =
-    ingestWarmLock.synchronized {
-      GraftCache.memoAny(s"$dir/impactfut") {
-        val fut = warmPool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            impactCompareShared(s, dir).count()
-            impactSweepShared(s, dir).count()
-          }
-        })
-        GraftCache.onClear(() => { fut.cancel(true); () })
-        fut
-      }
-    }
-
-  /** Warm chain for the iterative graph metrics (CC rounds, PageRank
-    * rounds, the triangle wedge join) — driver-serialized AQE-stage chains
-    * that overlap the dedup block instead of serializing at their slots.
-    */
-  private def graphFamilyFuture(s: SparkSession, dir: String)
-      : java.util.concurrent.Future[Unit] =
-    ingestWarmLock.synchronized {
-      GraftCache.memoAny(s"$dir/graphfamfut") {
-        val fut = warmPool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            componentsShared(s, dir).count()
-            pagerankShared(s, dir).count()
-            trianglesShared(s, dir).count()
-            // chain the watermark-grid ladder behind this one (r20 wave 7):
-            // the h_ block now runs mostly warm, so the old h_hitrate_curve
-            // kick leaves the chain a ~2 s window where it needs ~6 s — from
-            // here it starts ~15 queries ahead of its first consumer. The
-            // h_hitrate_curve kick stays as the fallback for filtered runs.
-            wmGridFuture(s, dir)
-            ()
-          }
-        })
-        GraftCache.onClear(() => { fut.cancel(true); () })
-        fut
-      }
-    }
-
-  /** Warm build of the early q_events_* as-of rollup, kicked in parallel
-    * with the CDC build (its consumer precedes the CDC block's).
-    */
-  private def eventsEarlyFuture(s: SparkSession, dir: String)
-      : java.util.concurrent.Future[Unit] =
-    ingestWarmLock.synchronized {
-      GraftCache.memoAny(s"$dir/eventsearlyfut") {
-        val fut = warmPool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = { asofBucketedShared(s, dir).count(); () }
-        })
-        GraftCache.onClear(() => { fut.cancel(true); () })
-        fut
-      }
-    }
-
-  /** Warm chain for the two end-to-end pipeline compositions, chained
-    * behind the shared near-dup pair frame (their dominant input) — the
-    * consumers sit ~40 queries after the dedup family's first member, so
-    * the serialized chain has the whole h_* block to finish in.
-    */
-  private def pipelinesFuture(s: SparkSession, dir: String)
-      : java.util.concurrent.Future[Unit] =
-    ingestWarmLock.synchronized {
-      GraftCache.memoAny(s"$dir/pipelinesfut") {
-        val fut = warmPool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            nearDupPairsShared(s, dir) // block until the pair frame lands
-            // stagger the graph-metrics ladder behind the pair frame (r20
-            // wave 7): kicked at the family head it contended with the
-            // pair build and cost dedup_keep_best +1.1 s — the pair frame
-            // is the dedup block's critical path, so it gets the window
-            // mostly to itself and the graph chain starts ~2 s later with
-            // its consumers still ~10 s out
-            graphFamilyFuture(s, dir)
-            pipelineCleanShared(s, dir).count()
-            pipelineMixShared(s, dir).count()
-          }
-        })
-        GraftCache.onClear(() => { fut.cancel(true); () })
-        fut
-      }
     }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -3184,8 +1860,7 @@ object SparkEntry {
       import s.implicits._
       // one shared keyed ranking serves all four cutoffs (the oracle's shape:
       // one ranked CTE, four rn filters), one grouped vote for the whole
-      // grid; the embed + ranking memos (rsWmDf/rsDelRanked) warm-build in
-      // the background from the family's first member — see wmGridFuture
+      // grid; the embed + ranking memos are rsWmDf/rsDelRanked
       val ranked = rsDelRanked(s, dir)
       val n  = ranked.count()
       val ps = Seq(0.0, 0.3, 0.5, 0.7)
@@ -3229,9 +1904,8 @@ object SparkEntry {
       //
       // The memo chain (classify → swept carriers → 6-strength tagged embed
       // as ONE checkpointed frame, plus the per-rep rankings) lives in the
-      // strgrid* builders and warm-builds in the background from the
-      // family's first member — see wmGridFuture. Reps × deletion rates
-      // ride broadcast joins in the single vote plan below.
+      // strgrid* builders. Reps × deletion rates ride broadcast joins in
+      // the single vote plan below.
       val rankedAll = strgridRankedAll(s, dir)
       val n = strgridN(s, dir)
       val wmAll = strgridWmAll(s, dir)
@@ -3266,8 +1940,7 @@ object SparkEntry {
       import s.implicits._
       // carrier selection for EVERY th in one swept plan + the th-tagged
       // embed grid as one checkpointed frame; the memo chain (thCarriersSwept
-      // → thWmAll, sharing strgridRankedAll's per-rep rankings) warm-builds
-      // in the background from the family's first member — see wmGridFuture
+      // → thWmAll) shares strgridRankedAll's per-rep rankings
       val rankedAll = strgridRankedAll(s, dir)
       val n = strgridN(s, dir)
       val wmAll = thWmAll(s, dir)
@@ -3301,9 +1974,166 @@ object SparkEntry {
     // missed/false kNN queries per carrier after embedding. Each replays
     // end-to-end in SQL (SCPW since the micros-rendered value hash made its
     // embed SQL-expressible — scpwEmbedCtes).
-    "h_impact_compare" -> ((s, dir) => impactCompareShared(s, dir)),
+    "h_impact_compare" -> ((s, dir) => {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import s.implicits._
+      val emb  = Tables.embeddings(s, dir)
+      val raw  = rawKnn(s, dir)
+      val base = raw.filter(col("rank") <= 10)
+      // classify feeds BOTH carrier selections below — the one shared
+      // checkpoint (classifiedShared) so no consumer recomputes the
+      // content-id/md5 expression chain
+      val cl   = classifiedShared(s, dir)
+      val bits = Tvp.bitsDf(s, WM)
+      val aiDf = ai(s, dir) // force the shared memo before forking
+      // each carrier frame feeds both its embed branch and the hit
+      // accounting — checkpoint once instead of re-running the selection
+      // windows per reference. The three selections are independent job
+      // chains on a mostly-idle local[32]; forking them overlaps their
+      // scheduling + window latencies (distinct memo keys, so the concurrent
+      // getOrElseUpdate races are harmless)
+      val fRs = Future(GraftCache.memo(s"$dir/impcmp-rsc") {
+        Tvp.carriersRs(cl, bits, Strength, key.seed).localCheckpoint()
+      })
+      val fTv = Future(GraftCache.memo(s"$dir/impcmp-tvc") {
+        Tvp.carriersAi(cl, bits, Strength, 0.1, aiDf).localCheckpoint()
+      })
+      val fSc = Future(GraftCache.memo(s"$dir/impcmp-scc") {
+        Scpw.carriers(emb, WM, Strength, scpwKey).localCheckpoint()
+      })
+      val fPrep = Future(GraftCache.memoAny(s"$dir/scpw-prep") {
+        Scpw.prepare(emb, scpwKey)
+      })
+      val rsC = Await.result(fRs, Duration.Inf)
+      val tvC = Await.result(fTv, Duration.Inf)
+      val scC = Await.result(fSc, Duration.Inf)
+      val scpwPrep = Await.result(fPrep, Duration.Inf)
+      val cases = Seq(
+        ("rs",  Tvp.applyEmbed(emb, rsC, D, key), rsC.select("vec_id")),
+        ("tvp", Tvp.applyEmbed(emb, tvC, D, key), tvC.select("vec_id")),
+        ("tm",  TabularMark.embed(emb, tmKey),
+          emb.filter(col("vec_id") < tmKey.nw).select("vec_id")),
+        ("scpw", Scpw.embed(emb, WM, Strength, scpwKey, Some(scC), Some(scpwPrep)),
+          scC.select("vec_id")))
+      val tagOf   = cases.map(_._1).zipWithIndex.toMap
+      val schemes = cases.map { case (n, _, _) => (n, tagOf(n)) }
+        .toDF("scheme", "sch")
+      // Each scheme's embedding only REPLACES its carrier rows, so its
+      // after-kNN is MERGED from the shared base pass: per (scheme, query),
+      // top-10 of (base top-17 minus that scheme's modified ids) ∪ one tiny
+      // grouped pass against just the modified rows. Bit-identical to the
+      // full 4×|corpus|² grouped recompute the oracle replays (unmodified
+      // rows keep their base fold distances; a query left with < 10
+      // unmodified survivors would make the merge lossy, and that case
+      // fails LOUDLY via an in-plan assert — see the witness below), at
+      // |corpus|·|carriers| cost: the scale shape for a 100 TB corpus with
+      // a few thousand carriers.
+      val modAll = cases.map { case (n, wmDf, ids) =>
+        wmDf.select(col("vec_id"), col("embedding"))
+          .join(broadcast(ids), Seq("vec_id"), "left_semi")
+          .withColumn("sch", lit(tagOf(n)))
+      }.reduce(_ unionByName _).transform(GraftCache.stage)
+      val qAll = cases.map { case (n, _, _) =>
+        emb.select(col("vec_id"), col("embedding")).withColumn("sch", lit(tagOf(n)))
+      }.reduce(_ unionByName _)
+      val modIds = modAll.select(col("sch").as("msch"), col("vec_id").as("mid"))
+      val rawTag = cases.map { case (n, _, _) =>
+        raw.select(col("query_id"), col("neighbor_id"), col("dist"))
+          .withColumn("sch", lit(tagOf(n)))
+      }.reduce(_ unionByName _)
+      val surv = rawTag.join(broadcast(modIds),
+          col("sch") === col("msch") && col("neighbor_id") === col("mid"), "left_anti")
+      val modTop = Knn.exactGrouped(qAll, modAll, 10, "sch", kernel = "fold")
+        .select(col("sch"), col("query_id"), col("neighbor_id"), col("dist"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("sch"), col("query_id"))
+        .orderBy(col("dist"), col("neighbor_id"))
+      // Exactness guard: ONE flagged aggregate over the persisted raw frame
+      // finds schemes where some query keeps < 10 unmodified survivors in
+      // its base top-17 (real at small SF — TM's fixed 100-row set is 20% of
+      // the sf0.01 corpus). Those schemes take the full grouped recompute;
+      // the rest ride the merge. The guard scans raw ONCE (untagged) — not
+      // the 4× tagged union.
+      val modFlag = modAll.select(col("vec_id").as("__mid"), col("sch").as("__msch"))
+      val shortSchemes = raw
+        .join(broadcast(modFlag), col("neighbor_id") === col("__mid"))
+        .groupBy(col("__msch"), col("query_id")).agg(count(lit(1)).as("nmod"))
+        // base depth is rawKnn's 2*M+1 — derive, don't hardcode, so the
+        // guard tracks the depth if M ever changes
+        .filter(col("nmod") > lit(2 * M + 1 - 10))
+        .select("__msch").distinct().collect().map(_.getInt(0)).toSet
+      val merged = surv.unionByName(modTop)
+        .withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= 10)
+      val afterAll =
+        if (shortSchemes.isEmpty) merged
+        else {
+          val corpusShort = cases.collect {
+            case (n, wmDf, _) if shortSchemes(tagOf(n)) =>
+              wmDf.select(col("vec_id"), col("embedding"))
+                .withColumn("sch", lit(tagOf(n)))
+          }.reduce(_ unionByName _).localCheckpoint()
+          val qShort = qAll.filter(col("sch").isInCollection(shortSchemes))
+          merged.filter(!col("sch").isInCollection(shortSchemes))
+            .unionByName(
+              Knn.exactGrouped(qShort, corpusShort, 10, "sch", kernel = "fold"))
+        }
+      // ONE grouped metrics plan for all four schemes (tag-keyed carrier
+      // hits → full-outer miss/false fold → per-scheme averages)
+      val carrTag = cases.map { case (n, _, ids) =>
+        ids.withColumn("sch", lit(tagOf(n)))
+      }.reduce(_ unionByName _)
+        .select(col("sch").as("csch"), col("vec_id").as("cid"))
+      val hitsB = base.join(broadcast(carrTag), col("neighbor_id") === col("cid"))
+        .select(col("csch").as("sch"), col("cid").as("carrier"), col("query_id").as("query"))
+      val hitsA = afterAll.join(broadcast(carrTag),
+          col("sch") === col("csch") && col("neighbor_id") === col("cid"))
+        .select(col("sch"), col("cid").as("carrier"), col("query_id").as("query"))
+      hitsB.withColumn("in_base", lit(1))
+        .join(hitsA.withColumn("in_after", lit(1)),
+          Seq("sch", "carrier", "query"), "full_outer")
+        .groupBy("sch", "carrier")
+        .agg(
+          sum(when(col("in_base").isNotNull && col("in_after").isNull, 1)
+            .otherwise(0)).as("miss"),
+          sum(when(col("in_after").isNotNull && col("in_base").isNull, 1)
+            .otherwise(0)).as("false_hits"))
+        .groupBy("sch")
+        .agg(round(avg("miss"), 6).as("avg_miss"),
+          round(avg("false_hits"), 6).as("avg_false"),
+          count(lit(1)).as("n_carriers"))
+        .join(broadcast(schemes), "sch")
+        .select("scheme", "n_carriers", "avg_miss", "avg_false")
+        .orderBy("scheme")
+    }),
 
-    "impact_embed_missfalse" -> ((s, dir) => impactMissfalseShared(s, dir)),
+    "impact_embed_missfalse" -> ((s, dir) => {
+      val emb  = Tables.embeddings(s, dir)
+      val base = rawKnn(s, dir).filter(col("rank") <= 10)
+      // classify + RS carrier selection are bit-identical to
+      // h_impact_compare's — share its memo keys so whichever query runs
+      // first pays the window/checkpoint build and the other rides the cache
+      val cl   = classifiedShared(s, dir)
+      val carriers = GraftCache.memo(s"$dir/impcmp-rsc") {
+        Tvp.carriersRs(cl, Tvp.bitsDf(s, WM), Strength, key.seed).localCheckpoint()
+      }
+      val wmDf  = Tvp.applyEmbed(emb, carriers, D, key)
+      // after-kNN merged from the shared base pass + a pass over just the
+      // modified carrier rows (bit-identical to a full recompute — see
+      // Knn.topKAfterModify)
+      val mod = wmDf.select(col("vec_id"), col("embedding"))
+        .join(broadcast(carriers.select(col("vec_id"))), Seq("vec_id"), "left_semi")
+      val after = Knn.topKAfterModify(emb, emb, rawKnn(s, dir), mod, 10)
+      val mf = Metrics.missFalse(
+        Metrics.carrierHits(base, carriers),
+        Metrics.carrierHits(after, carriers))
+      mf.agg(
+        round(avg("miss"), 6).as("avg_miss"),
+        round(avg("false_hits"), 6).as("avg_false"),
+        count(lit(1)).as("n_carriers"))
+    }),
 
     // H4/SO2 — attack impact on kNN accuracy after random deletion. Exact
     // integer counts (oracle-checkable); hit_rate = n_common/(n_queries·k).
@@ -3312,15 +2142,51 @@ object SparkEntry {
     // |base ∩ after| / (n·k). One grouped fold-kNN pass serves all nine
     // cells (queries × p against the tagged union of nested keep-sets).
     "h_hitrate_curve" -> ((s, dir) => {
-      // warm start (non-blocking): this is the h_ grid family's first
-      // member — kick the shared watermark-grid artifact chain's background
-      // build here so it overlaps the impact/robustness queries between
-      // this one and its first consumers; see wmGridFuture
-      wmGridFuture(s, dir)
-      hitrateCurveShared(s, dir)
+      import s.implicits._
+      val emb  = Tables.embeddings(s, dir)
+      val base = rawKnn(s, dir).filter(col("rank") <= 10)
+      val ps   = (1 to 9).map(_ / 10.0)
+      val aiDf = ai(s, dir)
+      // ONE ai ranking serves every cutoff (identical keep-sets to
+      // Attacks.adaptiveDelete's per-cell two-pass selection: rank order is
+      // (ai desc, vec_id), kept = rank > ceil(n·p))
+      val ranked = GraftCache.memo(s"$dir/hitrate-airank") {
+        Attacks.scoreRanked(emb.join(aiDf, "vec_id").select(col("vec_id"), col("ai")), "ai")
+          .select(col("vec_id"), col("__grank")).localCheckpoint()
+      }
+      val n0 = GraftCache.memoAny(s"$dir/strgrid-n") { emb.count() }
+      val embR = emb.join(ranked, "vec_id")
+      val keptAll = ps.map(p => embR
+          .filter(col("__grank") > ceil(lit(n0.toDouble) * lit(p)).cast("long"))
+          .select(col("vec_id"), col("embedding")).withColumn("p", lit(p)))
+        .reduce(_ unionByName _).localCheckpoint()
+      val qAll = ps.map(p => emb.select(col("vec_id"), col("embedding"))
+          .withColumn("p", lit(p))).reduce(_ unionByName _)
+      val after = Knn.exactGrouped(qAll, keptAll, 10, "p", kernel = "fold")
+      val nq = GraftCache.memoAny(s"$dir/strgrid-n") { emb.count() }
+      val common = after.select(col("p"), col("query_id"), col("neighbor_id"))
+        .join(base.select(col("query_id"), col("neighbor_id")),
+          Seq("query_id", "neighbor_id"), "left_semi")
+        .groupBy("p").agg(count(lit(1)).as("n_common"))
+      ps.toDF("p").join(common, Seq("p"), "left")
+        .select(col("p"), coalesce(col("n_common"), lit(0L)).as("n_common"),
+          lit(nq).as("n_queries"), lit(10L).as("k"),
+          (coalesce(col("n_common"), lit(0L)).cast("double") / (lit(nq.toDouble) * 10.0)).as("hit_rate"))
+        .orderBy("p")
     }),
 
-    "attack_hit_rate" -> ((s, dir) => attackHitRateShared(s, dir)),
+    "attack_hit_rate" -> ((s, dir) => {
+      import s.implicits._
+      val emb   = Tables.embeddings(s, dir)
+      val base  = rawKnn(s, dir).filter(col("rank") <= 10)
+      val att   = Attacks.randomDelete(emb, DeleteP, Seed)
+      val after = Knn.exact(emb, att, 10, kernel = "fold")
+      val nq    = base.select("query_id").distinct().count()
+      val nCommon = base.select("query_id", "neighbor_id")
+        .join(after.select("query_id", "neighbor_id"), Seq("query_id", "neighbor_id"), "left_semi")
+        .count()
+      Seq((nCommon, nq, 10L)).toDF("n_common", "n_queries", "k")
+    }),
 
     // SCPW A1 — md5 grouping over the first-topK-dims content id.
     "scpw_group_sizes" -> ((s, dir) => {
@@ -3412,9 +2278,7 @@ object SparkEntry {
     "h_tm_modify_grid" -> ((s, dir) => {
       import s.implicits._
       val emb  = Tables.embeddings(s, dir)
-      // TM-embed + 30-run keyed overwrite grid as one checkpointed frame;
-      // warm-built in the background from the family's first member — see
-      // wmGridFuture
+      // TM-embed + 30-run keyed overwrite grid as one checkpointed frame
       val tagged = tmModTagged(s, dir)
       val nw  = tmKey.nw.toDouble
       val pdf = TmGridPs.toDF("p")
@@ -3456,7 +2320,10 @@ object SparkEntry {
       nearDupPairsShared(s, dir).orderBy("a", "b")
     }),
 
-    "dedup_jaccard_pairs" -> ((s, dir) => jaccardPairsShared(s, dir)),
+    "dedup_jaccard_pairs" -> ((s, dir) => {
+      Dedup.jaccardPairs(Tables.documents(s, dir), threshold = 0.4)
+        .orderBy("a", "b")
+    }),
 
     // Benchmark-contamination screen: every doc sharing any trigram with
     // the held-out "benchmark" slice (doc_id ≡ 7 mod 100), with collision
@@ -3474,26 +2341,25 @@ object SparkEntry {
     // screen would report only as scattered shingle hits. LSH-banded on both
     // sides, benchmark side broadcast, verification candidates-only.
     "dedup_cross_neardup" -> ((s, dir) => {
-      // warm start (non-blocking): the shared near-dup pair frame is the
-      // dedup family's session artifact — kick its background build at the
-      // family's first member so it overlaps the family block; the two
-      // pipeline compositions chain behind it (pipelinesFuture)
-      nearDupPairsFuture(s, dir)
-      pipelinesFuture(s, dir)
-      // the impact pair kicks HERE, not behind the pair-frame await: its
-      // second item (the 10-threshold sweep) finishes barely ahead of its
-      // consumer, and the wave-7b stagger pushed it past (measured
-      // h_impact_sweep 0.04 → 0.76/1.77) — the ~2 s of pair-build overlap
-      // costs dedup_keep_best less than the sweep's miss costs the h_ block
-      impactFuture(s, dir)
-      crossNearDupShared(s, dir)
+      val docs = Tables.documents(s, dir)
+      Dedup.crossNearDups(
+          docs.filter(pmod(col("doc_id"), lit(100)) =!= 7),
+          docs.filter(pmod(col("doc_id"), lit(100)) === 7), threshold = 0.5)
+        .orderBy("a", "b")
     }),
 
     // The SAME decontamination through the general beyond-broadcast mode
     // (shuffle-hash candidate join — the shape when the right side is a
     // full corpus, not an eval set): rows must equal dedup_cross_neardup,
     // driver-gated by the shared oracle; PlanSpec gates the join shape.
-    "dedup_cross_neardup_large" -> ((s, dir) => crossNearDupLargeShared(s, dir)),
+    "dedup_cross_neardup_large" -> ((s, dir) => {
+      val docs = Tables.documents(s, dir)
+      Dedup.crossNearDups(
+          docs.filter(pmod(col("doc_id"), lit(100)) =!= 7),
+          docs.filter(pmod(col("doc_id"), lit(100)) === 7), threshold = 0.5,
+          broadcastBench = false)
+        .orderBy("a", "b")
+    }),
 
     // Exact duplicated-SPAN accounting (Dedup.spanDupStats): fixed-length
     // 8-token n-gram spans appearing in ≥2 docs, counted PER POSITION per
@@ -3530,7 +2396,19 @@ object SparkEntry {
     // the two-phase tournament top-k are unchanged. At 100 TB the filter
     // runs BEFORE the top-k machinery, so multi-term queries shrink the
     // candidate set exactly where the per-query sort pressure lives.
-    "text_bm25_and_topk" -> ((s, dir) => bm25AndShared(s, dir)),
+    "text_bm25_and_topk" -> ((s, dir) => {
+      import s.implicits._
+      val arity = bm25Queries.toDF("query_id", "term")
+        .groupBy("query_id").agg(count(lit(1)).as("q_terms"))
+      val scored = bm25ScoredShared(s, dir)
+        .join(broadcast(arity), "query_id")
+        .filter(col("n_terms") === col("q_terms"))
+        .drop("q_terms")
+      Bm25.topK(scored, k = 10)
+        .select(col("query_id"), col("rank"), col("doc_id"),
+          col("n_terms"), col("score_micros"))
+        .orderBy("query_id", "rank")
+    }),
 
     // Near-dup clustering: transitive closure of the minhash pair graph,
     // canonical (min) doc per cluster — the keep-one-per-cluster dedup rule.
@@ -3570,7 +2448,61 @@ object SparkEntry {
     // into quota). The within-source draw is the DLT priority scheme
     // (w/u over the (0,1] md5 uniform), so the sampled SET replays
     // row-for-row, and the summary fingerprints it per source.
-    "pipeline_mix_dedup" -> ((s, dir) => pipelineMixShared(s, dir)),
+    "pipeline_mix_dedup" -> ((s, dir) => {
+      val kTotal = 120.0
+      val docs = Tables.documents(s, dir)
+      val clusters = Dedup.nearDupClustersFromPairs(nearDupPairsShared(s, dir))
+      val qus = docs.select(col("doc_id"),
+        micros(TextOps.qualityScore(col("text"))).as("q_us"))
+      val best = clusters.join(qus, "doc_id")
+        .groupBy("canonical_id")
+        .agg(max(struct(col("q_us"), (-col("doc_id")).as("nid"))).as("__b"))
+        .select((-col("__b.nid")).as("doc_id"))
+      val keptIds = docs.select("doc_id")
+        .join(clusters.select("doc_id"), Seq("doc_id"), "left_anti")
+        .unionByName(best)
+      // checkpointed once: feeds the bounded quota collect AND the draw
+      val kept = GraftCache.stage(docs.join(keptIds, "doc_id"))
+      // |sources| rows driver-side — identical apportionment arithmetic to
+      // sample_mixture_sqrt, over the deduplicated counts
+      val rows = kept.groupBy("source").agg(count(lit(1)).as("n"))
+        .orderBy("source").collect()
+        .map(r => (r.getString(0), r.getLong(1), math.sqrt(r.getLong(1).toDouble)))
+      val bigW = rows.foldLeft(0.0)((a, r) => a + r._3)
+      val base = rows.map { case (src, n, w) =>
+        (src, n, math.floor(kTotal * w / bigW).toLong,
+          kTotal * w / bigW - math.floor(kTotal * w / bigW))
+      }
+      val rem = (kTotal - base.map(_._3).sum).toInt
+      val extras = base.sortBy { case (src, _, _, frac) => (-frac, src) }
+        .take(rem).map(_._1).toSet
+      import s.implicits._
+      val quotaDf = base.map { case (src, n, b, _) =>
+        (src, n, b + (if (extras.contains(src)) 1L else 0L))
+      }.toSeq.toDF("source", "n_kept", "quota")
+      val u = graft.text.Sample.unitCol(
+        concat(lit("mixdd|"), col("doc_id").cast("string")))
+      val w = org.apache.spark.sql.expressions.Window.partitionBy("source")
+        .orderBy(col("__pri").desc, col("doc_id"))
+      val sampled = kept
+        .withColumn("__pri", TextOps.qualityScore(col("text")) / u)
+        .withColumn("__rn", row_number().over(w))
+        .join(broadcast(quotaDf.select("source", "quota")), "source")
+        .filter(col("__rn") <= col("quota"))
+      quotaDf.join(
+          sampled.groupBy("source").agg(count(lit(1)).as("n_sampled"),
+            min("doc_id").as("first_doc"), max("doc_id").as("last_doc"),
+            sum("doc_id").as("sum_doc_ids"),
+            sum(micros(TextOps.qualityScore(col("text")))).as("sum_q_us")),
+          Seq("source"), "left")
+        .select(col("source"), col("n_kept"), col("quota"),
+          coalesce(col("n_sampled"), lit(0L)).as("n_sampled"),
+          coalesce(col("first_doc"), lit(-1L)).as("first_doc"),
+          coalesce(col("last_doc"), lit(-1L)).as("last_doc"),
+          coalesce(col("sum_doc_ids"), lit(-1L)).as("sum_doc_ids"),
+          coalesce(col("sum_q_us"), lit(-1L)).as("sum_q_us"))
+        .orderBy("source")
+    }),
 
     // The corpus-cleaning pipeline END-TO-END — the composition a
     // training-data user actually runs: quality filter → exact dedup →
@@ -3579,21 +2511,48 @@ object SparkEntry {
     // with it). One row per stage with the cumulative survivor count;
     // every stage replays in SQL so the whole composition is oracle-exact.
     "pipeline_clean_corpus" -> ((s, dir) => {
-      // warm start (non-blocking): the CDC build chain (cdcLogFuture →
-      // graphIngestFuture at its head, streamTrioFuture behind it) costs
-      // several seconds of background streaming work and its first
-      // consumers sit in the q_events_* block — kicking it here (r20), a
-      // dozen queries earlier than the q_events_changefeed kick it keeps,
-      // roughly doubles the covered window so a slower host still finishes
-      // the build before q_events_ivm_catchup awaits it
-      cdcLogFuture(s, dir)
-      // and the streaming-ingest recall gauge: its warm thread waits out
-      // the ingest build (chained off the CDC build above) and then
-      // materializes the gauge search before q_stream_graph_ingest_recall
-      giRecallFuture(s, dir)
-      // and the early as-of rollup, whose consumer precedes the CDC block's
-      eventsEarlyFuture(s, dir)
-      pipelineCleanShared(s, dir)
+      val docs = Tables.documents(s, dir)
+      // stages that feed MULTIPLE downstream consumers are localCheckpointed
+      // once (e: bands + verify shingles + anti-join left; nd: contamination
+      // probe + anti-join left); single-consumer stages stay lazy — and the
+      // five stage counts union into ONE aggregation job instead of five
+      // count actions (a fixture-scale composition pays mostly per-job
+      // overhead; at 100 TB the same fused plan just runs wider)
+      val q = docs.filter(TextOps.qualityScore(col("text")) >= 0.8)
+      val e = GraftCache.stage(Dedup.dropExactDups(q))
+      // near-dup pairs of the cleaned subset = the SHARED full-corpus pair
+      // frame restricted to both endpoints ∈ e: every step of the pair
+      // derivation is per-doc or pairwise (MinHash signature and band keys
+      // are functions of one doc's text; candidacy is band-bucket equality
+      // of a pair; the verify is the pair's exact shingle Jaccard), so
+      // restriction commutes with the computation — r20 swaps the second
+      // band+verify pass over e for two semi-joins against the memoized
+      // frame the dedup family already built (oracle unchanged and
+      // re-verified at sf0.001/0.01/0.1: the replay still derives pairs
+      // from ed directly)
+      val eIds = e.select("doc_id")
+      val ndRemove = nearDupPairsShared(s, dir)
+        .join(eIds.withColumnRenamed("doc_id", "a"), Seq("a"), "left_semi")
+        .join(eIds.withColumnRenamed("doc_id", "b"), Seq("b"), "left_semi")
+        .select(col("b").as("doc_id")).distinct()
+      val nd = GraftCache.stage(e.join(ndRemove, Seq("doc_id"), "left_anti"))
+      val bench = docs.filter(pmod(col("doc_id"), lit(100)) === 7)
+      val scan  = nd.filter(pmod(col("doc_id"), lit(100)) =!= 7)
+      val fin = scan.join(
+        Dedup.contamination(scan, bench, 4).select("doc_id"),
+        Seq("doc_id"), "left_anti")
+      Seq(
+        (0L, "input", docs),
+        (1L, "quality", q),
+        (2L, "exact_dedup", e),
+        (3L, "near_dup", nd),
+        (4L, "decontaminated", fin))
+        .map { case (i, nm, df) =>
+          df.agg(count(lit(1)).as("n_docs"))
+            .select(lit(i).as("stage_id"), lit(nm).as("stage"), col("n_docs"))
+        }
+        .reduce(_ unionByName _)
+        .orderBy("stage_id")
     }),
 
     // Per-doc quality MANIFEST — the actual deliverable of a pretraining
@@ -3831,7 +2790,21 @@ object SparkEntry {
     // (key, bucket)-partitioned window + bucket-tail carry pass — the plan
     // a key with a one-task-exceeding history needs. Same oracle: bucketing
     // must never change a row.
-    "q_events_asof_bucketed" -> ((s, dir) => asofBucketedShared(s, dir)),
+    "q_events_asof_bucketed" -> ((s, dir) => {
+      val ev = Tables.events(s, dir).select("user_id", "ts_ns", "event_id")
+      val dim = Tables.events(s, dir)
+        .filter(col("event_type") === "signup")
+        .groupBy("user_id", "ts_ns")
+        .agg(max(micros(col("value"))).as("signup_val_us"))
+      AsOfJoin.backwardBucketed(ev, dim, "user_id", "ts_ns",
+          Seq("signup_val_us"), bucketWidth = 86400000000000L)
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("n_events"),
+          sum(when(col("signup_val_us").isNotNull, 1L).otherwise(0L))
+            .as("n_matched"),
+          coalesce(sum("signup_val_us"), lit(0L)).as("sm_signup"))
+        .orderBy("user_id")
+    }),
 
     // Semi-structured extraction: the events fixture's `props` column is a
     // JSON payload. from_json with an explicit DDL schema is the
@@ -3991,14 +2964,6 @@ object SparkEntry {
     // not a file-rewrite echo (TableLogSpec pins a pure compaction diffing
     // EMPTY). The oracle replays the version definitions over raw events.
     "q_events_changefeed" -> ((s, dir) => {
-      // warm start (non-blocking): this is the pass's earliest change-feed
-      // consumer — kick the shared CDC-merge table's background build here
-      // so it overlaps the lake queries between this one and the first
-      // CDC-table consumer (q_events_ivm_catchup); see cdcLogFuture. The
-      // stream trio chains behind it (kicked as the CDC build finishes) so
-      // the two builds never contend for the window the CDC consumers
-      // await.
-      cdcLogFuture(s, dir)
       val table = eventsTimetravelDir(s, dir)
       graft.sources.TableLog.changeFeed(s, table, 1, 3)
         .groupBy("_change_type", "event_type")
@@ -4375,20 +3340,19 @@ object SparkEntry {
     // pass — a hot user's history splits across tasks instead of landing on
     // one (the sessionizer analog of AsOfJoin.backwardBucketed). 6 h ≫ the
     // 1800 s gap, so most sessions stitch zero or one boundary.
-    "q_events_sessions_bucketed" -> ((s, dir) => sessionsBucketedShared(s, dir)),
+    "q_events_sessions_bucketed" -> ((s, dir) => {
+      EventOps.sessionStatsBucketed(Tables.events(s, dir), gapSec = 1800,
+          bucketSec = 21600L)
+        .select("user_id", "session_seq", "n_events", "start_es", "end_es",
+          "sum_value_micros", "duration_sec")
+        .orderBy("user_id", "session_seq")
+    }),
 
-    // The shared four-leg replay's own reported line: alphabetically FIRST
-    // among q_stream_* in the bench's sorted order, so it — not whichever
-    // leg happens to sort first — pays the memoized concurrent replay
-    // build; each leg's row then reports its own sink-drain only. The
-    // result is a real correctness check, not just a timing hook: one row
-    // per leg with the row count of that leg's registered result, each
-    // count oracle-checked against the same SQL body the per-leg entries
-    // replay.
+    // The shared five-leg replay as one query: one row per leg with the row
+    // count of that leg's registered result, each count oracle-checked
+    // against the same SQL body the per-leg entries replay. Whichever of
+    // the replay's consumers runs first pays the memoized concurrent build.
     "q_stream_block" -> ((s, dir) => {
-      // warm start (non-blocking): the graph-ANN ingest build overlaps the
-      // block's concurrent legs and everything up to q_stream_graph_ingest
-      graphIngestFuture(s, dir)
       val legs = streamTrio(s, dir)
       Seq(
         "dedup"    -> legs("dedup"),
@@ -4466,10 +3430,42 @@ object SparkEntry {
     // commit protocols close; this is the honest no-table-format form).
     // Upsert correctness means the final table IS the distinct event set —
     // the oracle is the raw-table rollup.
-    "q_stream_upsert" -> ((s, dir) => {
-      // body extracted to upsertRawShared so the late stream warm chain
-      // can build it in the background on a cloned session
-      val res = upsertRawShared(s, dir)
+    "q_stream_upsert" -> ((caller, dir) => {
+      // own SQLConf: the build mutates session conf while it streams
+      val s = caller.newSession()
+      val n = streamSinkSeq.incrementAndGet()
+      val base = replayCkptBase(n)
+      val target = new java.io.File(base, "upsert").getAbsolutePath
+      GraftCache.onClear(() => rmTree(base))
+      val prevMode = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      try {
+        withStreamShufflePartitions(s, 4) {
+          val dayIdx = expr("cast(if(ts_ns >= 0, ts_ns div 86400000000000, " +
+            "-((-ts_ns + 86400000000000 - 1) div 86400000000000)) as int)")
+          val src = graft.streaming.StreamOps.eventsStreamBatched(s, dir)
+            .withColumn("__dup", explode(array(lit(0), lit(1)))).drop("__dup")
+            .select(col("event_id"), col("ts_ns"),
+              date_add(lit("1970-01-01").cast("date"), dayIdx).as("day"),
+              col("event_type"), micros(col("value")).as("us"))
+          val q = src.writeStream
+            .foreachBatch(graft.streaming.StreamOps.upsertBatch(target) _)
+            .option("checkpointLocation",
+              new java.io.File(base, "upsertckpt").getAbsolutePath)
+            .start()
+          try q.processAllAvailable() finally q.stop()
+        }
+      } finally prevMode match {
+        case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
+        case None    => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      }
+      val res = GraftCache.track(
+        s.read.option("basePath", target).parquet(target)
+          .groupBy("day")
+          .agg(count(lit(1)).as("n"), sum("us").as("sum_value_micros"))
+          .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
+            col("n"), col("sum_value_micros"))
+          .orderBy("day"))
       res.count() // materialize before the target dir can be cleared
       res
     }),
@@ -4482,8 +3478,35 @@ object SparkEntry {
     // VERSION (the upsert's whole history is time-travelable; UpsertSpec
     // reads the intermediate states back). Same merge semantics, same
     // oracle as q_events... as q_stream_upsert.
-    "q_stream_upsert_log" -> ((s, dir) => {
-      val res = upsertLogShared(s, dir)
+    "q_stream_upsert_log" -> ((caller, dir) => {
+      // own SQLConf: the build mutates session conf while it streams
+      val s = caller.newSession()
+      val n = streamSinkSeq.incrementAndGet()
+      val base = replayCkptBase(n)
+      val table = new java.io.File(base, "upsertlog").getAbsolutePath
+      GraftCache.onClear(() => rmTree(base))
+      withStreamShufflePartitions(s, 4) {
+        val dayIdx = expr("cast(if(ts_ns >= 0, ts_ns div 86400000000000, " +
+          "-((-ts_ns + 86400000000000 - 1) div 86400000000000)) as int)")
+        val src = graft.streaming.StreamOps.eventsStreamBatched(s, dir)
+          .withColumn("__dup", explode(array(lit(0), lit(1)))).drop("__dup")
+          .select(col("event_id"), col("ts_ns"),
+            date_add(lit("1970-01-01").cast("date"), dayIdx).as("day"),
+            col("event_type"), micros(col("value")).as("us"))
+        val q = src.writeStream
+          .foreachBatch(graft.streaming.StreamOps.upsertBatchLog(table) _)
+          .option("checkpointLocation",
+            new java.io.File(base, "upsertlogckpt").getAbsolutePath)
+          .start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      val res = GraftCache.track(
+        graft.sources.TableLog.read(s, table)
+          .groupBy("day")
+          .agg(count(lit(1)).as("n"), sum("us").as("sum_value_micros"))
+          .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
+            col("n"), col("sum_value_micros"))
+          .orderBy("day"))
       res.count() // materialize before the table dir can be cleared
       res
     }),
@@ -4528,8 +3551,44 @@ object SparkEntry {
     // result is the view's OWN history — version k of the view is the
     // maintained rollup after source version k — checked against the full
     // recompute of every version in the oracle.
-    "q_stream_changefeed_ivm" -> ((s, dir) => {
-      val res = cfIvmShared(s, dir)
+    "q_stream_changefeed_ivm" -> ((caller, dir) => {
+      // own SQLConf: the build mutates session conf while it streams
+      val s = caller.newSession()
+      // v6: a compaction lands before the consumer catches up — its feed is
+      // empty and the maintained state must pass through unchanged
+      val table = cdcLogCompactedShared(s, dir)
+      val n = streamSinkSeq.incrementAndGet()
+      val base = replayCkptBase(n)
+      val view = new java.io.File(base, "ivmview").getAbsolutePath
+      GraftCache.onClear(() => rmTree(base))
+      withStreamShufflePartitions(s, 4) {
+        val replay = eventsCdcReplayDir(s, dir)
+        // consumer: the 5-file replay is only the TICK CLOCK here —
+        // 5 ticks walk the cursor v1 (bootstrap) → v6
+        val qc = s.readStream
+          .schema(s.read.option("pathGlobFilter", "*.parquet").parquet(replay).schema)
+          .option("maxFilesPerTrigger", "1")
+          .option("latestFirst", "false")
+          .option("pathGlobFilter", "*.parquet")
+          .parquet(replay)
+          .writeStream
+          // auditing mode (1 source version per tick): this query's POINT is
+          // the version-by-version parity of the maintained history; the
+          // default whole-backlog catch-up is q_events_ivm_catchup's subject
+          .foreachBatch(
+            graft.streaming.StreamOps.changeFeedIvm(table, view,
+              maxVersionsPerTick = 1) _)
+          .option("checkpointLocation",
+            new java.io.File(base, "ivmcckpt").getAbsolutePath)
+          .start()
+        try qc.processAllAvailable() finally qc.stop()
+      }
+      val res = GraftCache.track(
+        (1 to graft.sources.TableLog.headVersion(view)).map { v =>
+          graft.sources.TableLog.read(s, view, Some(v))
+            .select(col("__v").as("version"), col("event_type"), col("n"),
+              col("sum_value_micros"))
+        }.reduce(_.unionByName(_)).orderBy("version", "event_type"))
       res.count() // materialize before the view dir can be cleared
       res
     }),
@@ -4549,9 +3608,22 @@ object SparkEntry {
     // the folded step (__v=6) — against the same full-recompute oracle
     // endpoints.
     "q_events_ivm_catchup" -> ((s, dir) => {
-      // body extracted to ivmCatchupShared so the post-CDC warm chain can
-      // build it in the background as soon as the CDC table lands
-      val res = ivmCatchupShared(s, dir)
+      val table = cdcLogCompactedShared(s, dir) // v1–6
+      val n = streamSinkSeq.incrementAndGet()
+      val base = replayCkptBase(n)
+      val view = new java.io.File(base, "ivmcatchup").getAbsolutePath
+      GraftCache.onClear(() => rmTree(base))
+      val tick = graft.streaming.StreamOps.changeFeedIvm(table, view) _
+      tick(s.range(1).toDF(), 0L) // bootstrap + ONE folded step: v1 → v6
+      tick(s.range(1).toDF(), 1L) // already converged — must be a no-op
+      require(graft.sources.TableLog.headVersion(view) == 2,
+        "catch-up must converge the 5-version backlog in one tick")
+      val res = GraftCache.track(
+        (1 to 2).map { v =>
+          graft.sources.TableLog.read(s, view, Some(v))
+            .select(col("__v").as("version"), col("event_type"), col("n"),
+              col("sum_value_micros"))
+        }.reduce(_.unionByName(_)).orderBy("version", "event_type"))
       res.count() // materialize before the view dir can be cleared
       res
     }),
@@ -4567,7 +3639,28 @@ object SparkEntry {
     // column, so each tick's merge touches only the day groups the
     // manifest diff names.
     "q_events_ivm_daily" -> ((s, dir) => {
-      val res = ivmDailyShared(s, dir)
+      val table = cdcLogCompactedShared(s, dir) // v1–6
+      val n = streamSinkSeq.incrementAndGet()
+      val base = replayCkptBase(n)
+      val view = new java.io.File(base, "ivmdaily").getAbsolutePath
+      GraftCache.onClear(() => rmTree(base))
+      import graft.streaming.StreamOps.{IvmCount, IvmSum}
+      val tick = graft.streaming.StreamOps.maintainView(table, view,
+        Seq("day"), Seq(IvmCount("n"), IvmSum("us", "sum_value_micros"))) _
+      tick(s.range(1).toDF(), 0L) // bootstrap + ONE folded step: v1 → v6
+      tick(s.range(1).toDF(), 1L) // already converged — must be a no-op
+      require(graft.sources.TableLog.headVersion(view) == 2,
+        "catch-up must converge the 5-version backlog in one tick")
+      val res = GraftCache.track(
+        (1 to 2).map { v =>
+          graft.sources.TableLog.read(s, view, Some(v))
+            // date_format like every other day-emitting query: the oracle's
+            // strftime is a VARCHAR, and the pandas read path renders a raw
+            // DATE as a midnight timestamp string (hash-mismatch)
+            .select(col("__v").as("version"),
+              date_format(col("day"), "yyyy-MM-dd").as("day"), col("n"),
+              col("sum_value_micros"))
+        }.reduce(_.unionByName(_)).orderBy("version", "day"))
       res.count() // materialize before the view dir can be cleared
       res
     }),
@@ -4581,7 +3674,26 @@ object SparkEntry {
     // rescan path runs inside this query, not just its spec). Same
     // two-endpoint history as the sibling IVM queries.
     "q_events_ivm_minmax" -> ((s, dir) => {
-      val res = ivmMinmaxShared(s, dir)
+      val table = cdcLogCompactedShared(s, dir) // v1–6
+      val n = streamSinkSeq.incrementAndGet()
+      val base = replayCkptBase(n)
+      val view = new java.io.File(base, "ivmminmax").getAbsolutePath
+      GraftCache.onClear(() => rmTree(base))
+      import graft.streaming.StreamOps.{IvmCount, IvmMax, IvmMin}
+      val tick = graft.streaming.StreamOps.maintainView(table, view,
+        Seq("day"), Seq(IvmCount("n"), IvmMin("us", "min_value_micros"),
+          IvmMax("us", "max_value_micros"))) _
+      tick(s.range(1).toDF(), 0L) // bootstrap + ONE folded step: v1 → v6
+      tick(s.range(1).toDF(), 1L) // already converged — must be a no-op
+      require(graft.sources.TableLog.headVersion(view) == 2,
+        "catch-up must converge the 5-version backlog in one tick")
+      val res = GraftCache.track(
+        (1 to 2).map { v =>
+          graft.sources.TableLog.read(s, view, Some(v))
+            .select(col("__v").as("version"),
+              date_format(col("day"), "yyyy-MM-dd").as("day"), col("n"),
+              col("min_value_micros"), col("max_value_micros"))
+        }.reduce(_.unionByName(_)).orderBy("version", "day"))
       res.count() // materialize before the view dir can be cleared
       res
     }),
@@ -4610,7 +3722,9 @@ object SparkEntry {
     // ann_graph_build_recall (the md5-chunked build's numbers; the
     // quartile chunking is the only difference).
     "q_stream_graph_ingest_recall" -> ((s, dir) => {
-      val res = giRecallShared(s, dir)
+      val (layersT, _) = graphIngestShared(s, dir)
+      val res = GraftCache.track(graphRecallGauge(s, dir,
+        layerOf(s, layersT, "rep"), layerOf(s, layersT, "base")))
       res.count() // materialize before the table dirs can be cleared
       res
     }),
@@ -4628,8 +3742,46 @@ object SparkEntry {
     // This is the index-freshness story at 100 TB: new embeddings enter
     // as append-only commits, never a rebuild or a rewrite of existing
     // inverted lists.
-    "q_stream_ivf_ingest" -> ((s, dir) => {
-      val res = ivfIngestShared(s, dir)
+    "q_stream_ivf_ingest" -> ((caller, dir) => {
+      // own SQLConf: the build mutates session conf while it streams
+      val s = caller.newSession()
+      val emb = Tables.embeddings(s, dir)
+      val (cents, _) = ivfDet(s, dir)
+      val n = streamSinkSeq.incrementAndGet()
+      val base = replayCkptBase(n)
+      val table = new java.io.File(base, "ivfingest").getAbsolutePath
+      GraftCache.onClear(() => rmTree(base))
+      withStreamShufflePartitions(s, 4) {
+        val replay = graft.streaming.StreamOps.multiBatchTableDir(
+          s, dir, "embeddings", Seq("vec_id"), 4)
+        val q = s.readStream
+          .schema(s.read.option("pathGlobFilter", "*.parquet").parquet(replay).schema)
+          .option("maxFilesPerTrigger", "1")
+          .option("latestFirst", "false")
+          .option("pathGlobFilter", "*.parquet")
+          .parquet(replay)
+          .writeStream
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            val b = batch.select(col("vec_id"),
+              col("embedding").cast("array<float>").as("embedding"))
+            graft.sources.TableLog.append(
+              Ann.ivfDetAssign(b, cents).select("vec_id", "embedding", "cluster"),
+              table)
+            ()
+          }
+          .option("checkpointLocation",
+            new java.io.File(base, "ivfingestckpt").getAbsolutePath)
+          .start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      require(graft.sources.TableLog.headVersion(table) == 4,
+        "the 4-batch replay must land exactly 4 append commits")
+      val idx = graft.sources.TableLog.read(s, table)
+      val res = GraftCache.track(
+        Ann.ivfDetSearch(emb.filter(col("vec_id") < 100), idx, cents,
+            k = 10, nprobe = 4)
+          .select(col("query_id"), col("neighbor_id"), col("rank").cast("long"))
+          .orderBy("query_id", "rank"))
       res.count() // materialize before the table dir can be cleared
       res
     }),
@@ -4708,15 +3860,6 @@ object SparkEntry {
     // ANN — brute-force cosine top-k baseline on a query sample
     // (fold kernel: scores bit-match the DuckDB oracle).
     "ann_brute_topk" -> ((s, dir) => {
-      // warm start (non-blocking): the exact kNN pass and its derived
-      // edge/accessibility frames are the session's most-reused memo chain
-      // (every graph query and adaptive attack rides them) — force their
-      // lazy persists on a background thread at the ANN family's first
-      // member so the first consumer reads cache instead of building it
-      knnChainFuture(s, dir)
-      // and the graph-ANN search memos, whose first consumers sit a few
-      // queries down the same family — see annGraphFuture
-      annGraphFuture(s, dir)
       val emb = Tables.embeddings(s, dir)
       cosKnn(s, dir)
         .select(col("query_id"), col("neighbor_id"), col("score"),
@@ -5007,7 +4150,16 @@ object SparkEntry {
     // kNN-edge artifact → beam search. Closes multimodal → graph search
     // end-to-end; the probes are OUT-OF-CORPUS query vectors, which is the
     // production shape (the other graph-ANN queries probe corpus members).
-    "crossmodal_graph_ann" -> ((s, dir) => cmGraphShared(s, dir)),
+    "crossmodal_graph_ann" -> ((s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      val (edgesDf, _) = KnnGraph.read(s, graphArtifactDir(s, dir))
+      GraphAnn.beamSearch(assetProbes(s, dir), embBucketed(s, dir), edgesDf,
+          GraphAnn.entryPoints(emb, GraphEntries),
+          k = 5, beam = GraphBeam, rounds = GraphRounds)
+        .select(col("query_id").as("asset_id"), col("neighbor_id"),
+          col("rank").cast("long"))
+        .orderBy("asset_id", "rank")
+    }),
 
     // Graph-traversal ANN — the THIRD search family (GraphAnn scaladoc),
     // and the reference-shaped one: FAISS HNSW answers index.search
@@ -5029,11 +4181,23 @@ object SparkEntry {
     // oracle computes the identical beam from count(*) inside the SQL, so
     // the gate holds at every fixture size; rounds are structural and
     // require-pinned to the unrolled count.
-    "ann_graph_topk_scaled" -> ((s, dir) =>
-      graphScaledSearchShared(s, dir)
+    "ann_graph_topk_scaled" -> ((s, dir) => {
+      val emb = Tables.embeddings(s, dir)
+      val nCorpus = strgridN(s, dir) // the memoized emb.count()
+      val beam = GraphAnn.efSearch(nCorpus, 10)
+      val rounds = GraphAnn.searchRounds(nCorpus, 2 * M)
+      require(rounds == ScaledGraphRounds,
+        s"schedule gives $rounds rounds for N=$nCorpus but the oracle " +
+          s"unrolls $ScaledGraphRounds — regenerate the replay " +
+          "(ScaledGraphRounds) for this fixture size")
+      val (edgesDf, _) = KnnGraph.read(s, graphArtifactDir(s, dir))
+      GraphAnn.beamSearch(emb.filter(col("vec_id") < 100), embBucketed(s, dir),
+        edgesDf, GraphAnn.entryPoints(emb, GraphEntries),
+        k = 10, beam = beam, rounds = rounds)
         .select(col("query_id"), col("neighbor_id"), col("dist"),
           col("rank").cast("long"))
-        .orderBy("query_id", "rank")),
+        .orderBy("query_id", "rank")
+    }),
 
     // Graph-ANN acceptance gauge: per-query recall@10 against the exact
     // fold-L2 ground truth (the memoized rawKnn frame) — the number that
@@ -5125,7 +4289,14 @@ object SparkEntry {
     // this is the "no rebuild needed" claim: batch-added nodes are reachable
     // and recall holds. Itself oracle-exact (the incremented edge tables
     // replay in SQL, then the same unrolled layered search runs over them).
-    "ann_graph_insert_recall" -> ((s, dir) => gaugeInsertRecall(s, dir)),
+    "ann_graph_insert_recall" -> ((s, dir) => {
+      val art = graphInsertDir(s, dir)
+      graphRecallGauge(s, dir,
+        ArtifactIO.readBucketed(s, s"$art/inrep",
+          "src BIGINT, dst BIGINT, dist DOUBLE", "src", KnnGraph.EdgeBuckets),
+        ArtifactIO.readBucketed(s, s"$art/inedges",
+          "src BIGINT, dst BIGINT, dist DOUBLE", "src", KnnGraph.EdgeBuckets))
+    }),
 
     // Incremental graph-ANN DELETE: the per-src fingerprints of every
     // adjacency list the repair re-trimmed (both layers) — the whole
@@ -5143,7 +4314,23 @@ object SparkEntry {
     // Read beside ann_graph_recall_layered: this is the "no rebuild after
     // deletes" claim. Itself oracle-exact (repaired layers + search + the
     // filtered ground truth all replay in SQL).
-    "ann_graph_delete_recall" -> ((s, dir) => gaugeDeleteRecall(s, dir)),
+    "ann_graph_delete_recall" -> ((s, dir) => {
+      val art = graphDeleteDir(s, dir)
+      val emb = Tables.embeddings(s, dir)
+      val survivors = emb.filter(!isDelVictim)
+      val dBase = ArtifactIO.readBucketed(s, s"$art/deledges",
+        "src BIGINT, dst BIGINT, dist DOUBLE", "src", KnnGraph.EdgeBuckets)
+      val dRep = ArtifactIO.readBucketed(s, s"$art/delrep",
+        "src BIGINT, dst BIGINT, dist DOUBLE", "src", KnnGraph.EdgeBuckets)
+      recallVs(
+        Knn.exact(emb.filter(col("vec_id") < 100), survivors, 10,
+          metric = "l2", kernel = "fold"),
+        GraphAnn.layeredSearch(emb.filter(col("vec_id") < 100),
+          embBucketed(s, dir), dRep, dBase,
+          GraphAnn.entryPoints(repsOf(survivors), GraphEntries),
+          k = 10, repBeam = RepBeam, baseBeam = BaseBeam,
+          repRounds = RepRounds, baseRounds = BaseRounds))
+    }),
 
     // SCALABLE BUILD: the whole layered graph constructed by CHUNKED
     // INSERTION (seed chunk exact-built, later chunks HNSW-added through
@@ -5161,7 +4348,14 @@ object SparkEntry {
     // chunk-built artifact vs the exact top-10 — read beside
     // ann_graph_recall_layered (the exact-built graph's numbers): the
     // within-batch-blindness price of never running all-pairs.
-    "ann_graph_build_recall" -> ((s, dir) => gaugeBuildRecall(s, dir)),
+    "ann_graph_build_recall" -> ((s, dir) => {
+      val art = graphBuildDir(s, dir)
+      graphRecallGauge(s, dir,
+        ArtifactIO.readBucketed(s, s"$art/bldrep",
+          "src BIGINT, dst BIGINT, dist DOUBLE", "src", KnnGraph.EdgeBuckets),
+        ArtifactIO.readBucketed(s, s"$art/bldedges",
+          "src BIGINT, dst BIGINT, dist DOUBLE", "src", KnnGraph.EdgeBuckets))
+    }),
 
     // NN-DESCENT REFINEMENT (r19): one local-join round over the
     // chunk-built base layer — each node scores its undirected
@@ -5177,7 +4371,14 @@ object SparkEntry {
     // REFINED base layer vs the exact top-10 — read beside
     // ann_graph_build_recall (the unrefined chunk-built layers) and
     // ann_graph_recall (the exact-built graph): what one round buys back.
-    "ann_graph_refine_recall" -> ((s, dir) => gaugeRefineRecall(s, dir)),
+    "ann_graph_refine_recall" -> ((s, dir) => {
+      recallVs(rawKnn(s, dir).filter(col("query_id") < 100 && col("rank") <= 10),
+        GraphAnn.beamSearch(
+          Tables.embeddings(s, dir).filter(col("vec_id") < 100),
+          embBucketed(s, dir), graphRefinedShared(s, dir),
+          GraphAnn.entryPoints(Tables.embeddings(s, dir), GraphEntries),
+          k = 10, beam = GraphBeam, rounds = GraphRounds))
+    }),
 
     // ANN — approximate LSH join path. Deterministic variant: keyed md5
     // Box–Muller hyperplanes (float32-quantized, the attack_insert
@@ -5442,11 +4643,37 @@ object SparkEntry {
 
     // SO3 — whole-row set overlap before/after modification
     // (roubust/roubust.py:158–183): distinct-embedding intersect/union counts.
-    "so3_overlap_modify" -> ((s, dir) => so3Shared(s, dir)),
+    "so3_overlap_modify" -> ((s, dir) => {
+      import s.implicits._
+      val emb = Tables.embeddings(s, dir)
+      val a = emb.select("embedding").distinct()
+      val b = Attacks.randomModify(emb, 0.2, D, Seed).select("embedding").distinct()
+      val ninter = a.intersect(b).count()
+      val nunion = a.union(b).distinct().count()
+      Seq((ninter, nunion)).toDF("n_intersect", "n_union")
+    }),
 
     // SO4 — hidden-node overlap across graph params (t_vector/e3:83–93):
     // bottom-10% sets for M=8 vs M=12 graphs.
-    "so4_hidden_overlap" -> ((s, dir) => so4Shared(s, dir)),
+    "so4_hidden_overlap" -> ((s, dir) => {
+      import s.implicits._
+      val emb = Tables.embeddings(s, dir)
+      def hidden(m: Int): org.apache.spark.sql.DataFrame = {
+        val raw = GraftCache.memo(s"$dir/rawknn-m$m") {
+          KnnGraph.rawKnn(emb, 2 * m + 1)
+        }
+        val qc = KnnGraph.queryCounts(emb, raw, k = 10)
+        val n  = qc.count()
+        qc.orderBy(col("query_count"), col("vec_id")).limit(math.ceil(n * 0.1).toInt)
+          .select("vec_id")
+      }
+      val base  = hidden(8).cache()
+      val other = hidden(12)
+      val nb    = base.count()
+      val ni    = base.intersect(other).count()
+      base.unpersist() // both consumers ran; a bare cache() outlives clear()
+      Seq((nb, ni, ni.toDouble / nb)).toDF("n_base", "n_intersect", "overlap")
+    }),
 
     // G5/G6 — BFS flood from never-queried seeds + reached-set edge stats
     // (t_vector/e1_steath_vector.py:41–54, 89–116).
@@ -5457,7 +4684,22 @@ object SparkEntry {
     // ordering kills the 6× duplicate counting up front. Per-node
     // participation (each corner +1 per triangle) for the top-10 most
     // clustered nodes.
-    "graph_triangles" -> ((s, dir) => trianglesShared(s, dir)),
+    "graph_triangles" -> ((s, dir) => {
+      val (e0, _) = KnnGraph.read(s, graphArtifactDir(s, dir))
+      val e = e0.select("src", "dst")
+      val mutual = e.as("x").join(e.as("y"),
+          col("x.src") === col("y.dst") && col("x.dst") === col("y.src"))
+        .select(col("x.src").as("a"), col("x.dst").as("b"))
+        .filter(col("a") < col("b")).distinct()
+      val tri = mutual.as("ab")
+        .join(mutual.as("bc"), col("ab.b") === col("bc.a"))
+        .join(mutual.as("ac"),
+          col("ac.a") === col("ab.a") && col("ac.b") === col("bc.b"))
+        .select(col("ab.a"), col("ab.b"), col("bc.b").as("c"))
+      tri.select(explode(array(col("a"), col("b"), col("c"))).as("vec_id"))
+        .groupBy("vec_id").agg(count(lit(1)).as("n_triangles"))
+        .orderBy(col("n_triangles").desc, col("vec_id")).limit(10)
+    }),
 
     // PageRank over the persisted kNN edge artifact: three synchronous
     // rounds of rank flow in SCALED-INTEGER arithmetic (start 10^12, damping
@@ -5470,7 +4712,25 @@ object SparkEntry {
     // sink-mass term. Headroom: ranks stay ≤ ~10^12, contrib sums ≤
     // |V|·10^12 — the 85× multiply overflows past |V| ≈ 10^5·10^12/85,
     // i.e. ~10^17 total mass; at larger |V| drop the start scale.
-    "graph_pagerank" -> ((s, dir) => pagerankShared(s, dir)),
+    "graph_pagerank" -> ((s, dir) => {
+      val (e0, _) = KnnGraph.read(s, graphArtifactDir(s, dir))
+      val e = e0.select("src", "dst")
+      val deg = e.groupBy("src").agg(count(lit(1)).as("od"))
+      val nodes = Tables.embeddings(s, dir).select("vec_id")
+      var rank = nodes.withColumn("r", lit(1000000000000L))
+      (1 to 3).foreach { _ =>
+        val contrib = e.join(deg, "src")
+          .join(rank.withColumnRenamed("vec_id", "src"), "src")
+          .select(col("dst").as("vec_id"), expr("r div od").as("c"))
+          .groupBy("vec_id").agg(sum("c").as("c"))
+        rank = nodes.join(contrib, Seq("vec_id"), "left")
+          .select(col("vec_id"),
+            expr("cast(150000000000 as bigint) + (85 * coalesce(c, 0)) div 100")
+              .as("r"))
+      }
+      rank.select(col("vec_id"), col("r").as("rank_scaled"))
+        .orderBy(col("rank_scaled").desc, col("vec_id")).limit(20)
+    }),
 
     // UNDIRECTED components via alternating large-star/small-star
     // (KnnGraph.componentsUndirected) — the O(log² n)-round CC algorithm.
@@ -5481,7 +4741,14 @@ object SparkEntry {
     // Per-round state is the edge LIST — no per-node neighborhood buffer
     // ever materializes (the hash-to-min algorithm's root cluster would be
     // the whole component in one row: the collect_list trap again).
-    "graph_components_undirected" -> ((s, dir) => componentsShared(s, dir)),
+    "graph_components_undirected" -> ((s, dir) => {
+      val nodes = Tables.embeddings(s, dir).select("vec_id")
+      val cc = KnnGraph.componentsUndirected(edges(s, dir).select("src", "dst"))
+      nodes.join(cc, Seq("vec_id"), "left")
+        .select(col("vec_id"), coalesce(col("comp"), col("vec_id")).as("comp"))
+        .groupBy("comp").agg(count(lit(1)).as("n_nodes"))
+        .orderBy("comp")
+    }),
 
     "graph_bfs_reach" -> ((s, dir) => {
       import s.implicits._
@@ -5555,7 +4822,21 @@ object SparkEntry {
         .orderBy("vec_id")
     }),
 
-    "h_impact_sweep" -> ((s, dir) => impactSweepShared(s, dir)),
+    "h_impact_sweep" -> ((s, dir) => {
+      Experiments.impactSweep(Tables.embeddings(s, dir),
+        ths = (1 to 10).map(_ / 10.0), WM, Strength, k = 10, d = D, wmKey = key,
+        sharedRaw = Some(rawKnn(s, dir)), sharedAi = Some(ai(s, dir)),
+        // bit-identical to h_impact_compare's classify — the one shared
+        // checkpoint (classifiedShared); whichever consumer runs first pays
+        // the window/checkpoint build
+        sharedClassified = Some(classifiedShared(s, dir)))
+        .select(col("th"), col("n_carriers"),
+          round(col("avg_miss"), 6).as("avg_miss"),
+          round(col("avg_false"), 6).as("avg_false"),
+          round(col("traffic_before"), 6).as("traffic_before"),
+          round(col("traffic_after"), 6).as("traffic_after"))
+        .orderBy("th")
+    }),
 
     // H1/H2 — robustness grid (embed → attack → extract → BER). RS + TVP
     // × five attack families (incl. K4 adaptive modification, which rides
@@ -5568,13 +4849,41 @@ object SparkEntry {
     // deletions, the run-overwrite + full re-classification for the
     // modifications, per-dim fold-stat gaussian synthesis + re-classification
     // for the insertions.
-    "h_robustness_grid" -> ((s, dir) => robustnessGridShared(s, dir)),
+    "h_robustness_grid" -> ((s, dir) => {
+      Experiments.robustnessGrid(
+        Tables.embeddings(s, dir),
+        schemes = Seq(Experiments.SchemeRs, Experiments.SchemeTvp),
+        attacks = Seq("random_delete", "adaptive_delete", "random_modify",
+          "adaptive_modify", "insert"),
+        ps = RobGridPs, reps = 1,
+        wm = WM, strength = 0.7, th = 0.5, d = D, wmKey = key, scpwKey = scpwKey,
+        sharedAi = Some(ai(s, dir)))
+        .select(col("scheme"), col("attack"), col("p"), col("rep").cast("long"), col("ber"))
+        .orderBy("scheme", "attack", "p", "rep")
+    }),
 
     // H2 — the SCPW column of the scheme comparison, same attack grid.
     // Oracle-exact since the value hash moved to the micros rendering
     // (Scpw.hiddenBit): classification, the rejection-resample embed, every
     // attack cell, and the majority vote all replay in SQL (scpwGridSql).
-    "h_scpw_grid" -> ((s, dir) => scpwGridShared(s, dir)),
+    "h_scpw_grid" -> ((s, dir) => {
+      Experiments.robustnessGrid(
+        Tables.embeddings(s, dir),
+        schemes = Seq(Experiments.SchemeScpw),
+        attacks = Seq("random_delete", "adaptive_delete", "random_modify",
+          "adaptive_modify", "insert"),
+        ps = RobGridPs, reps = 1,
+        wm = WM, strength = 0.7, th = 0.5, d = D, wmKey = key, scpwKey = scpwKey,
+        sharedAi = Some(ai(s, dir)),
+        // the pool + noise constants are strength-independent — ride the
+        // memo the other SCPW queries share instead of re-collecting the
+        // pool and stats aggregate every bench pass
+        sharedScpwPrep = Some(GraftCache.memoAny(s"$dir/scpw-prep") {
+          Scpw.prepare(Tables.embeddings(s, dir), scpwKey)
+        }))
+        .select(col("scheme"), col("attack"), col("p"), col("rep").cast("long"), col("ber"))
+        .orderBy("scheme", "attack", "p", "rep")
+    }),
 
     // The RESULTS.md quality curve, driver-gated: TVP + adaptive deletion
     // with the reference's OWN parameters (compare/roubust.py:162–176 —
@@ -5584,13 +4893,32 @@ object SparkEntry {
     // h_robustness_grid, replayed cell-for-cell in SQL at the curve's
     // parameters — RESULTS.md's table is reproduced by an oracle-checked
     // query instead of a probe report.
-    "h_quality_curve" -> ((s, dir) => qualityCurveShared(s, dir)),
+    "h_quality_curve" -> ((s, dir) => {
+      Experiments.robustnessGrid(
+        Tables.embeddings(s, dir),
+        schemes = Seq(Experiments.SchemeTvp),
+        attacks = Seq("adaptive_delete"),
+        ps = CurvePs, reps = 1,
+        wm = CurveWm, strength = 0.54, th = 1.0, d = D, wmKey = key,
+        scpwKey = scpwKey, sharedAi = Some(ai(s, dir)))
+        .select(col("p"), col("ber"))
+        .orderBy("p")
+    }),
 
     // RESULTS.md row 2 — TVP + RANDOM deletion, the published 10-rep
     // configuration: same embed, ten rep-seeded deletion rankings (reps
     // re-roll only the attack), per-(p, rep) BER gated row-for-row; the
     // published mean is the average over these gated values.
-    "h_quality_curve_rand" -> ((s, dir) => qualityCurveRandShared(s, dir)),
+    "h_quality_curve_rand" -> ((s, dir) => {
+      Experiments.randomDeleteRepCurve(
+        Tables.embeddings(s, dir),
+        scheme = Experiments.SchemeTvp,
+        ps = CurvePs, reps = CurveReps,
+        wm = CurveWm, strength = 0.54, th = 1.0, d = D, wmKey = key,
+        scpwKey = scpwKey, sharedAi = Some(ai(s, dir)))
+        .select(col("p"), col("rep").cast("long"), col("ber"))
+        .orderBy("p", "rep")
+    }),
 
     // Corpus vocabulary heavy hitters: token frequency with a deterministic
     // top-k cut. The scale shape is the canonical 100 TB word count —

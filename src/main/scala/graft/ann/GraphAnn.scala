@@ -305,7 +305,7 @@ object GraphAnn {
       insertLayer(repBeamFinal.join(repQueries, "query_id"), repEdgesOld, outDeg))
   }
 
-  /** INCREMENTAL DELETE — the repair half of the LSM bargain (r16 wave 2,
+  /** INCREMENTAL DELETE — the repair half of the LSM bargain (r16,
     * complement of insertBatch). Dropping a node's rows is trivial; the
     * graph property that must be REPAIRED is the navigability its in-edges
     * provided: a search path that used to route s → victim → target dies

@@ -47,7 +47,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the adds). Entries without stats for the queried column are always kept:
   * conservative, never wrong, so stats can be adopted incrementally.
   *
-  * Schema evolution (r16 wave 2): every commit records its frame's DDL in
+  * Schema evolution (r16): every commit records its frame's DDL in
   * the manifest entry, and reads resolve drift FROM THE LOG (`readEntries`)
   * — per-schema scan groups folded with unionByName, a column added by a
   * later commit reading as NULL from older directories, never a parquet
@@ -349,7 +349,7 @@ object TableLog {
     * untagged (an append/overwrite with stats renders `path||stats|…`).
     * Field 2 (stats) is `col:min:max` triples joined with ';', values
     * long-encoded (statLongCol), column names URL-encoded. Field 3
-    * (schema, r16 wave 2) is the committed frame's DDL, URL-encoded — the
+    * (schema, r16) is the committed frame's DDL, URL-encoded — the
     * log-recorded schema that makes reads EVOLUTION-AWARE (readEntries)
     * without ever merging parquet footers. Pre-r16 entries have ≤ 2
     * fields, earlier-r16 entries 3; both parse identically (no stats →
@@ -741,7 +741,7 @@ object TableLog {
     readEntries(spark, table, manifest(table, v))
   }
 
-  /** SCHEMA EVOLUTION (r16 wave 2, add-column only): read a set of live
+  /** SCHEMA EVOLUTION (r16, add-column only): read a set of live
     * entries with schema drift resolved FROM THE LOG. Entries group by
     * their recorded DDL (newest first — commit appends adds at the tail),
     * each group scans with exactly that schema (no parquet footer merging,

@@ -2,16 +2,20 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Gates for the r20 GraftCache hardening (the r19 ADVICE items):
+/** Gates for GraftCache's lifecycle:
   *   1. memo/memoAny bodies evaluate exactly once under same-key
-  *      concurrency — the background warm futures (cdcLogFuture,
-  *      knnChainFuture, …) race foreground queries through these memos,
-  *      and TrieMap.getOrElseUpdate alone double-evaluates on a lost
-  *      race (leaking the loser's persist() mark, double-running
-  *      side-effecting bodies);
+  *      concurrency — h_impact_compare's in-query Futures,
+  *      Experiments.forked's pool threads and concurrent queries on one
+  *      session run memo bodies side by side, and
+  *      TrieMap.getOrElseUpdate alone double-evaluates on a lost race
+  *      (leaking the loser's persist() mark, double-running side-effecting
+  *      bodies);
   *   2. clear() releases the lazily-checkpointed rounds' cached blocks
   *      (stage() pins MEMORY_AND_DISK blocks that previously waited on
-  *      GC + ContextCleaner).
+  *      GC + ContextCleaner);
+  *   3. shared artifacts are built on demand by their first consumer, on
+  *      that consumer's thread: once a query's action returns, no work it
+  *      caused is still running.
   */
 class GraftCacheSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -54,7 +58,7 @@ class GraftCacheSpec extends AnyFunSuite {
   }
 
   test("publishDir under a memo does not deadlock against a memo under publishDir") {
-    // The r20 bench deadlock: one warm thread held ArtifactIO's (then
+    // The r20 bench deadlock: one thread held ArtifactIO's (then
     // global) publishDir monitor and called into a memoized builder (a
     // GraftCache.Once monitor) while another thread held that Once and
     // called publishDir for a DIFFERENT target. publishDir's lock is now
@@ -112,5 +116,44 @@ class GraftCacheSpec extends AnyFunSuite {
     // waiting for GC/ContextCleaner
     assert(spark.sparkContext.getPersistentRDDs.size < persistedBefore,
       "clear() must explicitly unpersist the staged checkpoint RDDs")
+  }
+
+  test("no background work outlives a query") {
+    val sc = spark.sparkContext
+    val drainGroup = "graftcachespec-drain"
+    val lateJobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    @volatile var returnedAt = Long.MaxValue
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val group = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (group == drainGroup) drained.countDown()
+        else if (js.time > returnedAt)
+          lateJobs.add(s"job ${js.jobId}: ${js.stageInfos.map(_.name).mkString("; ")}")
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      Seq("ann_brute_topk", "dedup_cross_neardup").foreach { name =>
+        SparkEntry.queries(name)(spark, TestSpark.sf0001).count()
+      }
+      returnedAt = System.currentTimeMillis()
+      val graftThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+        .filter(t => t.isAlive && t.getName.startsWith("graft-")).map(_.getName)
+      assert(graftThreads.isEmpty,
+        s"background threads outlived the queries: ${graftThreads.mkString(", ")}")
+      // settle, then push a marker job through the listener bus: once its
+      // start event arrives, every job submitted before it has been seen
+      Thread.sleep(1500)
+      sc.setJobGroup(drainGroup, "listener-bus drain marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not drain")
+      assert(lateJobs.isEmpty,
+        s"Spark jobs started after the queries returned: ${lateJobs.toArray.mkString(" | ")}")
+    } finally {
+      sc.removeSparkListener(listener)
+      GraftCache.clear()
+    }
   }
 }

@@ -13,15 +13,15 @@ Usage:
       [--passes 5] [--sf /root/testdata/sf0.1] [--calib-gate 0.2] [--cpus 32]
 
 Protocol:
-  1. `git worktree add` a clean checkout of <git-ref> under /tmp (reused if
-     it already exists), `sbt compile` both trees up front.
+  1. Extract a clean `git archive` of <git-ref> under $TMPDIR (default /tmp;
+     reused if it already exists), `sbt compile` both trees up front.
   2. passes x (current, baseline) interleaved single-measured-pass Bench
      invocations (fresh JVM each, internal warmup pass kept, auto-extend
      disabled) restricted to the named queries.
   3. Report per-query medians AND minima per tree, the baseline/current
-     ratios, and each pass's calib reading; passes whose calib exceeds the
-     gate are flagged as storm-contaminated (prefer the minima, as Bench
-     itself documents).
+     ratios, each tree's summed per-query medians and minima, and each
+     pass's calib reading; passes whose calib exceeds the gate are flagged
+     as storm-contaminated (prefer the minima, as Bench itself documents).
 
 A ratio within ~5-10% on minima under a quiet calib means "no regression";
 a stable ratio >1.2x across quiet interleaved passes is a real one.
@@ -36,6 +36,7 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -53,7 +54,11 @@ def bench_once(tree, queries, sf, cpus):
                SPARK_GRAFT_BENCH_MAX_EXTRA="0",
                SPARK_GRAFT_SF_DIR=sf,
                SPARK_GRAFT_CPUS=str(cpus))
-    out = run(["sbt", "-batch", "runMain graft.Bench"], tree, env, capture=True)
+    # no check: a tree whose queries fail still prints its JSON line (the
+    # failed queries are absent from its maps) before exiting non-zero
+    print(f"  $ sbt -batch 'runMain graft.Bench'  (cwd={tree})", flush=True)
+    out = subprocess.run(["sbt", "-batch", "runMain graft.Bench"], cwd=tree,
+                         env=env, capture_output=True, text=True)
     for line in out.stdout.splitlines():
         line = line.strip()
         if line.startswith('{"queries"'):
@@ -67,6 +72,9 @@ def bench_once(tree, queries, sf, cpus):
                       f"(baseline older than r10?) — calib recorded as nan",
                       flush=True)
                 return d["queries"], float("nan")
+            if d.get("n_failed"):
+                print(f"  !! {tree}: failed queries: {sorted(d['failed'])}",
+                      flush=True)
             return d["queries"], calibs[0]
     sys.exit(f"no bench JSON line from {tree}:\n{out.stdout[-2000:]}")
 
@@ -90,9 +98,13 @@ def main():
 
     sha = run(["git", "rev-parse", "--short", args.baseline], REPO,
               capture=True).stdout.strip()
-    wt = f"/tmp/graft_ab_{sha}"
+    wt = os.path.join(tempfile.gettempdir(), f"graft_ab_{sha}")
     if not os.path.isdir(wt):
-        run(["git", "worktree", "add", "--detach", wt, sha], REPO)
+        os.makedirs(wt)
+        print(f"  $ git archive {sha} | tar -x -C {wt}", flush=True)
+        archive = subprocess.run(["git", "archive", sha], cwd=REPO, check=True,
+                                 capture_output=True).stdout
+        subprocess.run(["tar", "-x", "-C", wt], input=archive, check=True)
     print(f"== baseline {sha} at {wt}; building both trees", flush=True)
     for tree in (REPO, wt):
         run(["sbt", "-batch", "compile"], tree, capture=True)
@@ -127,10 +139,15 @@ def main():
         nr = min(cm) / min(bm) if min(bm) else float("nan")
         print(f"{q:32s} {median(cm):8.2f} {median(bm):9.2f} {mr:8.2f} "
               f"{min(cm):8.2f} {min(bm):9.2f} {nr:8.2f}")
+    for tag, res in results.items():
+        common = [q for q in queries if all(q in m for m, _ in res)]
+        print(f"{tag:8s} summed medians {sum(median([m[q] for m, _ in res]) for q in common):8.2f}s"
+              f"  summed minima {sum(min(m[q] for m, _ in res) for q in common):8.2f}s"
+              f"  ({len(common)} queries)")
     calibs = [c for t in results.values() for _, c in t]
     print(f"calib range {min(calibs):.2f}-{max(calibs):.2f}s "
           f"({sum(1 for c in calibs if c > args.calib_gate)}/{len(calibs)} stormy)")
-    print(f"worktree kept at {wt} (remove: git worktree remove {wt})")
+    print(f"baseline tree kept at {wt} (remove: rm -r {wt})")
 
 
 if __name__ == "__main__":
