@@ -62,7 +62,7 @@ object GraftCache {
   private val retained = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
 
   /** Pin an object until `clear()`. Used by the lazily-checkpointed search
-    * rounds (GraphAnn.stage): a `localCheckpoint(eager = false)` defers
+    * rounds of GraphAnn's join plan (GraphAnn.stage): a `localCheckpoint(eager = false)` defers
     * materialization to the consuming action, by which time the round's
     * Dataset — the only strong reference to its physical plan and its
     * SQLMetric accumulators — may have been collected; the task-end

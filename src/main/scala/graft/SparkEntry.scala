@@ -917,8 +917,8 @@ object SparkEntry {
 
   /** The shared graph-traversal ANN result for the standard query sample
     * (first 100 vectors, top-10): both the top-k dump and the recall gauge
-    * consume it, and the beam search's R localCheckpoint rounds are the
-    * whole cost — memoized like rawKnn. Rides the PERSISTED edge artifact
+    * consume it, and the beam search is the whole cost — memoized like
+    * rawKnn. Rides the PERSISTED edge artifact
     * (read cold from parquet), not the in-session edges frame: graph search
     * is the index's query path, and its 100 TB deployment reads the
     * write-once graph table.
@@ -5676,7 +5676,7 @@ object SparkEntry {
        |  FROM tmids t LEFT JOIN offsets o ON o.id = t.id)""".stripMargin
   }
 
-  /** Sequential squared-L2 fold (matches VectorOps.l2Col² / Ann.sqDistFold:
+  /** Sequential squared-L2 fold (matches VectorOps.l2Col² / VectorOps.sqDist:
     * 0.0-seeded left-to-right accumulation, so argmin orderings replay).
     */
   private def l2sqSql(a: String, b: String): String =
@@ -7315,7 +7315,8 @@ object SparkEntry {
          |    row_number() OVER (ORDER BY md5(cast(vec_id as varchar) || '#modrow#$Seed'), vec_id) AS rn,
          |    count(*) OVER () AS nn
          |  FROM embeddings),
-         |stats AS (SELECT min(embedding[${modDim0 + 1}]) AS mn, max(embedding[${modDim0 + 1}]) AS mx
+         |stats AS (SELECT cast(min(embedding[${modDim0 + 1}]) as double) AS mn,
+         |          cast(max(embedding[${modDim0 + 1}]) as double) AS mx
          |          FROM embeddings),
          |diffs AS (SELECT CASE WHEN rn <= ceil(nn * 0.2)
          |    THEN sqrt((cast(cast(mn + (mx - mn) *
@@ -8914,7 +8915,8 @@ object SparkEntry {
          |    row_number() OVER (ORDER BY md5(cast(vec_id as varchar) || '#modrow#$Seed'), vec_id) AS rn,
          |    count(*) OVER () AS n
          |  FROM embeddings),
-         |stats AS (SELECT min(embedding[${modDim0 + 1}]) AS mn, max(embedding[${modDim0 + 1}]) AS mx
+         |stats AS (SELECT cast(min(embedding[${modDim0 + 1}]) as double) AS mn,
+         |          cast(max(embedding[${modDim0 + 1}]) as double) AS mx
          |          FROM embeddings)
          |SELECT vec_id,
          |  CASE WHEN rn <= ceil(n * 0.2)
@@ -9011,7 +9013,8 @@ object SparkEntry {
            |    SELECT vec_id, row_number() OVER (ORDER BY ai DESC, vec_id) AS rn,
            |      count(*) OVER () AS n FROM ai)
            |  WHERE rn <= ceil(n * 0.2)),
-           |st AS (SELECT min(embedding[${modDim0 + 1}]) AS mn, max(embedding[${modDim0 + 1}]) AS mx
+           |st AS (SELECT cast(min(embedding[${modDim0 + 1}]) as double) AS mn,
+           |         cast(max(embedding[${modDim0 + 1}]) as double) AS mx
            |       FROM embeddings),
            |rs AS (SELECT e.vec_id, e.embedding,
            |    cast(${md5ModSql(s"cast(e.vec_id as varchar) || '#moddim#$Seed'", D)} as bigint) AS run_start,
@@ -9795,7 +9798,8 @@ object SparkEntry {
          |    row_number() OVER (ORDER BY md5(cast(vec_id as varchar) || '#modrow#$Seed'), vec_id) AS rn,
          |    count(*) OVER () AS n
          |  FROM embeddings),
-         |stats AS (SELECT min(embedding[${modDim0 + 1}]) AS mn, max(embedding[${modDim0 + 1}]) AS mx
+         |stats AS (SELECT cast(min(embedding[${modDim0 + 1}]) as double) AS mn,
+         |          cast(max(embedding[${modDim0 + 1}]) as double) AS mx
          |          FROM embeddings),
          |modded AS (SELECT vec_id,
          |    CASE WHEN rn <= ceil(n * 0.2)

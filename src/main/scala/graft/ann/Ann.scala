@@ -1,5 +1,6 @@
 package graft.ann
 
+import graft.functions.VectorOps
 import graft.knn.Knn
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -98,20 +99,6 @@ object Ann {
 
   // ---- Deterministic IVF (oracle-replayable, zero spark.ml dependency) ----
 
-  /** Sequential left-to-right squared-L2 fold — bit-identical to the Column
-    * `aggregate(zip_with(...))` form and the DuckDB list_reduce lambda, so
-    * assignment/probe argmins replay exactly in the oracle.
-    */
-  private def sqDistFold(a: Array[Float], c: Array[Float]): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < a.length) {
-      val d = a(i).toDouble - c(i).toDouble
-      s += d * d; i += 1
-    }
-    s
-  }
-
   /** Coarse centroids as a keyed-md5 sample of the corpus itself: cluster c
     * is the c-th corpus row in md5("seed|"+vec_id) order. Sampled data points
     * are a standard coarse-quantizer choice (IVF recall comes from nprobe,
@@ -169,7 +156,7 @@ object Ann {
       var best = 0; var bestD = Double.MaxValue
       var c = 0
       while (c < cs.length) {
-        val d2 = sqDistFold(a, cs(c))
+        val d2 = VectorOps.sqDist(a, cs(c))
         if (d2 < bestD) { bestD = d2; best = c }
         c += 1
       }
@@ -223,7 +210,7 @@ object Ann {
     val probeUdf = udf((q: Seq[Float]) => {
       val cs = bc.value
       val a  = q.toArray
-      cs.indices.map(c => (sqDistFold(a, cs(c)), c))
+      cs.indices.map(c => (VectorOps.sqDist(a, cs(c)), c))
         .sorted.take(nprobe).map(_._2).toArray
     })
     val probed = queries
@@ -255,7 +242,7 @@ object Ann {
     val ranksUdf = udf((q: Seq[Float]) => {
       val cs = bc.value
       val a  = q.toArray
-      cs.indices.map(c => (sqDistFold(a, cs(c)), c)).sorted
+      cs.indices.map(c => (VectorOps.sqDist(a, cs(c)), c)).sorted
         .zipWithIndex.map { case ((_, c), i) => (c, i + 1) }
     })
     queries.select(col("vec_id").as("query_id"),

@@ -1,6 +1,7 @@
 package graft.ann
 
 import graft.functions.VectorOps
+import graft.knn.Knn
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
@@ -24,21 +25,46 @@ import org.apache.spark.sql.DataFrame
   * Fixed R (not per-query convergence) keeps the traversal replayable as R
   * unrolled SQL rounds and gives the batch a deterministic cost envelope.
   *
-  * 100 TB shape: this is batched DiskANN/HNSW-style search — per round ONE
-  * equi-join of the frontier against the edge table (co-located BY THE
-  * PLANNER: KnnGraph.write buckets the artifact by `src` and KnnGraph.read
-  * re-declares the spec, so only the frontier side exchanges —
-  * GraphAnnSpec gates that no round re-shuffles the edge table) plus one
-  * equi-join against the corpus for scoring; all per-query state is
-  * |Q|·B rows. No broadcast of anything unbounded, no global sort — the
+  * One traversal (`traverse`: a sequence of phases, each an edge layer, a
+  * beam width and a round count) serves the flat search, the layered
+  * search and the incremental insert, in two physical regimes with the
+  * same rows (GraphAnnSpec gates the parity bit for bit):
+  *
+  * FUSED (below the wall): when the corpus flat index plus every phase's
+  * adjacency fits `graft.knn.broadcastMaxBytes` — the same budget as
+  * `Knn.exact`'s broadcast — the corpus is collected into a Knn.FlatIndex
+  * (ids ascending, looked up by binary search), each edge layer into CSR
+  * arrays, and both are broadcast with the entry nodes; ONE map-only pass
+  * over the queries then runs every round of every phase per query with a
+  * bounded (dist, node) beam. The decision costs one size probe per input
+  * (corpus, each edge frame) before any collect; corpus and edges reach
+  * the driver the way `Knn.exact`'s index does (Knn.collectIndex /
+  * fetchPacked: packed per-partition blocks, split into as many jobs as
+  * `spark.driver.maxResultSize` requires). A multi-frame result (the
+  * insert's two phases) is checkpointed eagerly and the broadcast
+  * released. A fused operator in the FuseME (SIGMOD 2022) sense: a
+  * handful of jobs for the whole search instead of R rounds of shuffle
+  * joins.
+  *
+  * JOIN PLAN (above the wall; the 100 TB shape): batched DiskANN/HNSW-style
+  * search — per round ONE equi-join of the frontier against the edge table
+  * (co-located BY THE PLANNER: KnnGraph.write buckets the artifact by `src`
+  * and KnnGraph.read re-declares the spec, so only the frontier side
+  * exchanges — GraphAnnSpec gates that no round re-shuffles the edge table)
+  * plus one equi-join against the corpus for scoring; all per-query state
+  * is |Q|·B rows. No broadcast of anything unbounded, no global sort — the
   * only windows partition by query_id over ≤ B·(2M+1) rows. The query
   * embedding rides the frontier rows (d floats per row) — the standard
   * batched-traversal trade: re-joining the query table each round would
-  * save bytes but add a shuffle per round.
+  * save bytes but add a shuffle per round. The same plan also takes a
+  * corpus the flat index does not represent (null or ragged embeddings).
+  *
+  * Query ids must be unique: the join plan ranks per query_id, the fused
+  * pass per query row.
   */
 object GraphAnn {
 
-  /** Per-round lineage truncation for the search/insert loops, LAZILY: a
+  /** Per-round lineage truncation for the join plan's round loop, LAZILY: a
     * `localCheckpoint(eager = false)` instead of the old eager form. The
     * logical plan still truncates at the call (the round re-plans against
     * a LogicalRDD — the reason the checkpoint existed), but materialization
@@ -128,24 +154,7 @@ object GraphAnn {
   def beamSearch(queries: DataFrame, corpus: DataFrame, edgesDf: DataFrame,
                  entries: DataFrame, k: Int, beam: Int, rounds: Int): DataFrame = {
     require(beam >= k, s"beam width $beam must cover the requested top-$k")
-    def score(cand: DataFrame): DataFrame = scoreCandidates(cand, corpus)
-    val w = Window.partitionBy("query_id").orderBy(col("dist"), col("node"))
-    def topB(df: DataFrame): DataFrame =
-      df.withColumn("rn", row_number().over(w)).filter(col("rn") <= beam).drop("rn")
-    // round 0: every query scores the shared entry set (tiny — broadcast)
-    var beamDf = topB(score(
-      queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        .crossJoin(broadcast(entries))))
-      .transform(stage) // per-round lineage truncation (lazy: see `stage`)
-    var r = 0
-    while (r < rounds) {
-      beamDf = topB(beamDf.unionByName(score(
-        frontierCandidates(beamDf, edgesDf)))).transform(stage)
-      r += 1
-    }
-    beamDf
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("node").as("neighbor_id"), col("dist"), col("rank"))
+    topK(traverse(queries, corpus, entries, Seq(Phase(edgesDf, beam, rounds))).last, k)
   }
 
   /** Two-phase LAYERED beam search — HNSW's actual hierarchy idea in batch
@@ -176,30 +185,8 @@ object GraphAnn {
                     repBeam: Int, baseBeam: Int,
                     repRounds: Int, baseRounds: Int): DataFrame = {
     require(baseBeam >= k, s"base beam $baseBeam must cover the requested top-$k")
-    def score(cand: DataFrame): DataFrame = scoreCandidates(cand, corpus)
-    val w = Window.partitionBy("query_id").orderBy(col("dist"), col("node"))
-    def topB(df: DataFrame, b: Int): DataFrame =
-      df.withColumn("rn", row_number().over(w)).filter(col("rn") <= b).drop("rn")
-    var beamDf = topB(score(
-      queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-        .crossJoin(broadcast(entries))), repBeam)
-      .transform(stage)
-    var r = 0
-    while (r < repRounds) {
-      beamDf = topB(beamDf.unionByName(score(
-        frontierCandidates(beamDf, repEdges))), repBeam).transform(stage)
-      r += 1
-    }
-    var refined = topB(beamDf, baseBeam).transform(stage)
-    r = 0
-    while (r < baseRounds) {
-      refined = topB(refined.unionByName(score(
-        frontierCandidates(refined, baseEdges))), baseBeam).transform(stage)
-      r += 1
-    }
-    refined
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("node").as("neighbor_id"), col("dist"), col("rank"))
+    topK(traverse(queries, corpus, entries,
+      Seq(Phase(repEdges, repBeam, repRounds), Phase(baseEdges, baseBeam, baseRounds))).last, k)
   }
 
   /** INCREMENTAL INSERT — HNSW's add operation in batch form (r16). A corpus
@@ -278,31 +265,12 @@ object GraphAnn {
                   repRounds: Int, baseRounds: Int): (LayerInsert, LayerInsert) = {
     require(insBeam >= outDeg,
       s"insert beam $insBeam must cover the out-degree cap $outDeg (efConstruction >= M)")
-    def score(cand: DataFrame): DataFrame = scoreCandidates(cand, corpusOld)
-    val w = Window.partitionBy("query_id").orderBy(col("dist"), col("node"))
-    def topB(df: DataFrame): DataFrame =
-      df.withColumn("rn", row_number().over(w)).filter(col("rn") <= insBeam).drop("rn")
-    val q0 = newVecs.select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-      isRep.as("__rep"))
-    var beamDf = topB(score(
-      q0.select("query_id", "qe").crossJoin(broadcast(entries)))).transform(stage)
-    var r = 0
-    while (r < repRounds) {
-      beamDf = topB(beamDf.unionByName(score(
-        frontierCandidates(beamDf, repEdgesOld)))).transform(stage)
-      r += 1
-    }
-    val repBeamFinal = beamDf
-    var refined = beamDf
-    r = 0
-    while (r < baseRounds) {
-      refined = topB(refined.unionByName(score(
-        frontierCandidates(refined, baseEdgesOld)))).transform(stage)
-      r += 1
-    }
-    val repQueries = q0.filter(col("__rep")).select("query_id")
-    (insertLayer(refined, baseEdgesOld, outDeg),
-      insertLayer(repBeamFinal.join(repQueries, "query_id"), repEdgesOld, outDeg))
+    val Seq(repFinal, baseFinal) = traverse(newVecs, corpusOld, entries,
+      Seq(Phase(repEdgesOld, insBeam, repRounds), Phase(baseEdgesOld, insBeam, baseRounds)),
+      shared = true)
+    val repQueries = newVecs.filter(isRep).select(col("vec_id").as("query_id"))
+    (insertLayer(baseFinal, baseEdgesOld, outDeg),
+      insertLayer(repFinal.join(repQueries, "query_id"), repEdgesOld, outDeg))
   }
 
   /** INCREMENTAL DELETE — the repair half of the LSM bargain (r16,
@@ -378,16 +346,235 @@ object GraphAnn {
     LayerDelete(retrimmed, repaired)
   }
 
-  /** One round's frontier expansion: neighbors of the beam not already IN
-    * the beam; a node dropped in an earlier round may be re-scored — dist
-    * is a pure function, so the result equals the oracle's simpler
-    * "score(beam ∪ neighbors)" rule. Exposed for the plan gate: when
-    * `edgesDf` is the BUCKETED persisted artifact (KnnGraph.read), this
-    * equi-join must consume the edge table's bucket layout and shuffle only
-    * the frontier side — an edge-side Exchange here multiplies by R rounds
-    * and is exactly the regression GraphAnnSpec pins.
+  // ---- the traversal: one round rule, two physical regimes ----
+
+  /** One leg of a traversal: `rounds` expansions over `edges` (src, dst, …)
+    * at beam width `beam`.
     */
-  /** The round's OTHER join: score candidates (query_id, qe, node) by
+  private final case class Phase(edges: DataFrame, beam: Int, rounds: Int)
+
+  /** Runs `phases` in order from the shared entry set and returns each
+    * phase's final beam as (query_id, node, dist, rank), rank 1..|beam| by
+    * (dist, node). Round 0 scores the entries at the first phase's width; at
+    * each transition the beam is cut to the next phase's width; every round
+    * is topB(beam ∪ score(neighbours(beam) \ beam)). Dispatches on the
+    * broadcast wall (see the object doc). `shared`: the caller reads more
+    * than one of the returned frames.
+    */
+  private def traverse(queries: DataFrame, corpus: DataFrame, entries: DataFrame,
+                       phases: Seq[Phase], shared: Boolean = false): Seq[DataFrame] =
+    fusedSizes(corpus, phases.map(_.edges).distinct) match {
+      case Some(sz) => fusedTraverse(queries, corpus, sz, entries, phases, shared)
+      case None     => joinTraverse(queries, corpus, entries, phases)
+    }
+
+  /** The join plan: each round is an edge join, a dedup, an anti-join, a
+    * corpus scoring join and a window, lineage-truncated by `stage`.
+    */
+  private def joinTraverse(queries: DataFrame, corpus: DataFrame, entries: DataFrame,
+                           phases: Seq[Phase]): Seq[DataFrame] = {
+    val byQuery = Window.partitionBy("query_id").orderBy(col("dist"), col("node"))
+    def topB(df: DataFrame, b: Int): DataFrame =
+      df.withColumn("rank", row_number().over(byQuery)).filter(col("rank") <= b)
+        .transform(stage)
+    var beamDf = topB(scoreCandidates(
+      queries.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+        .crossJoin(broadcast(entries)), corpus), phases.head.beam)
+    var width = phases.head.beam
+    phases.map { p =>
+      if (p.beam < width) beamDf = topB(beamDf.drop("rank"), p.beam)
+      width = p.beam
+      for (_ <- 0 until p.rounds) {
+        val beamRows = beamDf.drop("rank")
+        beamDf = topB(beamRows.unionByName(scoreCandidates(
+          frontierCandidates(beamRows, p.edges), corpus)), p.beam)
+      }
+      beamDf.select("query_id", "node", "dist", "rank")
+    }
+  }
+
+  /** What the regime decision learned: the corpus probe and each distinct
+    * edge frame's (src, dst) row count.
+    */
+  private[graft] final case class FusedSizes(corpus: Knn.CorpusShape, edges: Map[DataFrame, Long])
+
+  /** The regime decision: Some when the corpus flat index plus every edge
+    * frame's (src, dst) pairs fit the broadcast wall. One probe job per
+    * input before any collect (Knn.probeCorpus; a row count per edge frame
+    * that, like it, stops each partition at the rows the budget admits). A
+    * corpus the flat index cannot hold row for row the way the scoring
+    * join reads it — empty, a NULL embedding, ragged dimensions — takes
+    * the join plan.
+    */
+  private[graft] def fusedSizes(corpus: DataFrame, edgeFrames: Seq[DataFrame]): Option[FusedSizes] = {
+    val spark = corpus.sparkSession
+    val shape = Knn.probeCorpus(corpus)
+    val corpusBytes = Knn.indexBytes(shape.rows, shape.maxDim, needNorms = false)
+    if (!shape.uniform || !Knn.fitsBroadcast(spark, corpusBytes)) return None
+    val cap = Knn.rowCap(spark, 16) // src + dst longs
+    val edges = edgeFrames.map { e =>
+      e -> edgePairs(e).mapPartitions { it =>
+        var n = 0L
+        while (n < cap && it.hasNext) { it.next(); n += 1 }
+        Iterator(n)
+      }(org.apache.spark.sql.Encoders.scalaLong).collect().sum
+    }.toMap
+    if (Knn.fitsBroadcast(spark, corpusBytes + edges.values.sum * 16)) Some(FusedSizes(shape, edges))
+    else None
+  }
+
+  private def edgePairs(e: DataFrame): org.apache.spark.sql.Dataset[(Long, Long)] = {
+    import e.sparkSession.implicits._
+    e.select(col("src"), col("dst")).na.drop().as[(Long, Long)]
+  }
+
+  /** One edge layer as CSR: `src` distinct ascending; node src(i)'s distinct
+    * out-neighbours are dst(off(i) until off(i + 1)), ascending.
+    */
+  private final case class Csr(src: Array[Long], off: Array[Int], dst: Array[Long])
+
+  /** `m` (src, dst) rows of `e` as CSR: the pairs arrive through
+    * Knn.fetchPacked into pre-sized arrays, then are bucketed by `src`.
+    */
+  private def csrOf(e: DataFrame, m: Long): Csr = {
+    require(m <= Int.MaxValue, s"fused traversal: $m edges")
+    val srcs = new Array[Long](m.toInt)
+    val dsts = new Array[Long](m.toInt)
+    var at = 0
+    Knn.fetchPacked(edgePairs(e), m * 16) { it =>
+      val s = Array.newBuilder[Long]; val t = Array.newBuilder[Long]
+      it.foreach { case (a, b) => s += a; t += b }
+      (s.result(), t.result())
+    } { case (s, t) =>
+      require(at + s.length <= m, "edge table grew during the fused build")
+      System.arraycopy(s, 0, srcs, at, s.length)
+      System.arraycopy(t, 0, dsts, at, t.length)
+      at += s.length
+    }
+    require(at == m, s"edge table shrank during the fused build: expected $m rows, got $at")
+    val sorted = srcs.clone()
+    java.util.Arrays.sort(sorted)
+    val src = sorted.distinct
+    val start = new Array[Int](src.length + 1)
+    srcs.foreach(x => start(java.util.Arrays.binarySearch(src, x) + 1) += 1)
+    for (j <- src.indices) start(j + 1) += start(j)
+    val fill = start.clone()
+    val dst = new Array[Long](dsts.length)
+    for (i <- srcs.indices) {
+      val j = java.util.Arrays.binarySearch(src, srcs(i))
+      dst(fill(j)) = dsts(i); fill(j) += 1
+    }
+    // sort each list and drop duplicate edge rows, compacting in place
+    val off = new Array[Int](src.length + 1)
+    var w = 0
+    for (j <- src.indices) {
+      java.util.Arrays.sort(dst, start(j), start(j + 1))
+      off(j) = w
+      for (i <- start(j) until start(j + 1))
+        if (i == start(j) || dst(i) != dst(i - 1)) { dst(w) = dst(i); w += 1 }
+    }
+    off(src.length) = w
+    Csr(src, off, java.util.Arrays.copyOf(dst, w))
+  }
+
+  /** The fused regime's broadcast: corpus index, one CSR per phase (a layer
+    * shared by two phases is one object), the entry node multiset.
+    */
+  private final case class FusedGraph(index: Knn.FlatIndex, d: Int,
+                                      layers: Array[Csr], entries: Array[Long])
+
+  /** (dist, node) ascending in Spark's SQL order for doubles (-0.0 = 0.0). */
+  private val byDistNode: Ordering[(Double, Long)] = (a, b) => {
+    val c = if (a._1 == b._1) 0 else java.lang.Double.compare(a._1, b._1)
+    if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+  }
+
+  /** One query's whole traversal against the broadcast graph: each phase's
+    * final beam, (dist, node) ascending. Scoring mirrors the join: one
+    * (dist, node) per corpus row with that id — none for an id without a
+    * row, several for a duplicated id. A null query scores every node as
+    * the join's null dist does: all equal, so the beam orders by node.
+    */
+  private def walk(q: Array[Float], g: FusedGraph,
+                   beams: Array[Int], rounds: Array[Int]): Array[Array[(Double, Long)]] = {
+    if (q != null && q.length != g.d) throw new IllegalArgumentException(
+      s"graft fold kernel: dimension mismatch (${q.length} vs ${g.d})")
+    val ids = g.index.ids
+    val cand = scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]
+    def score(node: Long): Unit = {
+      var j = java.util.Arrays.binarySearch(ids, node)
+      if (j >= 0) {
+        while (j > 0 && ids(j - 1) == node) j -= 1
+        while (j < ids.length && ids(j) == node) {
+          val dist = if (q == null) 0.0 else math.sqrt(VectorOps.sqDist(q, g.index.flat, j * g.d))
+          cand += ((dist, node)); j += 1
+        }
+      }
+    }
+    def topB(b: Int): Array[(Double, Long)] = cand.sorted(byDistNode).take(b).toArray
+    g.entries.foreach(score)
+    var beam = topB(beams(0))
+    Array.tabulate(beams.length) { p =>
+      beam = beam.take(beams(p))
+      val layer = g.layers(p)
+      for (_ <- 0 until rounds(p)) {
+        val inBeam = beam.map(_._2).sorted
+        val next = inBeam.flatMap { n =>
+          val i = java.util.Arrays.binarySearch(layer.src, n)
+          if (i < 0) Array.empty[Long] else layer.dst.slice(layer.off(i), layer.off(i + 1))
+        }.sorted.distinct
+        cand.clear(); cand ++= beam
+        next.foreach(n => if (java.util.Arrays.binarySearch(inBeam, n) < 0) score(n))
+        beam = topB(beams(p))
+      }
+      beam
+    }
+  }
+
+  /** The fused regime: collect corpus, edge layers and entries, broadcast
+    * them, and run every round of every phase per query in ONE map-only
+    * pass. A `shared` result feeds one frame per phase, so it is
+    * checkpointed eagerly and the broadcast released: the frames then read
+    * the checkpoint, and nothing pins the corpus index.
+    */
+  private def fusedTraverse(queries: DataFrame, corpus: DataFrame, sizes: FusedSizes,
+                            entries: DataFrame, phases: Seq[Phase],
+                            shared: Boolean): Seq[DataFrame] = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val index = Knn.collectIndex(corpus, sizes.corpus, needNorms = false)
+    val layerOf = sizes.edges.map { case (e, m) => e -> csrOf(e, m) }
+    val entryIds = entries.select(col("node")).na.drop().as[Long].collect()
+    val bc = spark.sparkContext.broadcast(FusedGraph(index, sizes.corpus.maxDim,
+      phases.map(p => layerOf(p.edges)).toArray, entryIds))
+    val beams = phases.map(_.beam).toArray
+    val rounds = phases.map(_.rounds).toArray
+    val out = queries.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+      .mapPartitions { it =>
+        val g = bc.value
+        it.flatMap { case (qid, q) =>
+          walk(q, g, beams, rounds).iterator.zipWithIndex.flatMap { case (beam, p) =>
+            beam.iterator.zipWithIndex.map { case ((dist, node), r) =>
+              (p, qid, node, Option.when(q != null)(dist), r + 1)
+            }
+          }
+        }
+      }
+      .toDF("phase", "query_id", "node", "dist", "rank")
+    val read = if (shared) {
+      val ck = out.localCheckpoint()
+      bc.unpersist()
+      ck
+    } else out
+    phases.indices.map(p => read.filter(col("phase") === p).drop("phase"))
+  }
+
+  /** The final top-k of a traversal's beam in the public result shape. */
+  private def topK(beam: DataFrame, k: Int): DataFrame =
+    beam.filter(col("rank") <= k)
+      .select(col("query_id"), col("node").as("neighbor_id"), col("dist"), col("rank"))
+
+  /** The round's scoring join: score candidates (query_id, qe, node) by
     * fold-L2 against the corpus. Exposed for the plan gate like
     * frontierCandidates: when `corpus` is a BUCKETED table (bucketed by
     * vec_id — the layout any serious deployment gives its vector corpus),
@@ -400,6 +587,15 @@ object GraphAnn {
       .withColumn("dist", VectorOps.l2Col(col("qe"), col("ne")))
       .select(col("query_id"), col("qe"), col("node"), col("dist"))
 
+  /** One round's frontier expansion: neighbors of the beam not already IN
+    * the beam; a node dropped in an earlier round may be re-scored — dist
+    * is a pure function, so the result equals the oracle's simpler
+    * "score(beam ∪ neighbors)" rule. Exposed for the plan gate: when
+    * `edgesDf` is the BUCKETED persisted artifact (KnnGraph.read), this
+    * equi-join must consume the edge table's bucket layout and shuffle only
+    * the frontier side — an edge-side Exchange here multiplies by R rounds
+    * and is exactly the regression GraphAnnSpec pins.
+    */
   private[graft] def frontierCandidates(beamDf: DataFrame, edgesDf: DataFrame): DataFrame =
     beamDf.select("query_id", "qe", "node")
       .join(edgesDf.select(col("src").as("node"), col("dst")), "node")

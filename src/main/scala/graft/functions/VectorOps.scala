@@ -11,10 +11,27 @@ import org.apache.spark.sql.functions._
   */
 object VectorOps {
 
+  /** Squared L2 as the engine's one fold: `acc := acc + (double(a_i) −
+    * double(b_i))²` left to right from 0.0 — the subtraction in DOUBLE, so
+    * `l2` is bit-identical to FoldL2Expr (the SQL scoring joins) and to the
+    * DuckDB lambda fold every oracle replays.
+    */
   def sqDist(a: Array[Float], b: Array[Float]): Double = {
+    if (a.length != b.length) throw new IllegalArgumentException(
+      s"graft fold kernel: dimension mismatch (${a.length} vs ${b.length})")
+    sqDist(a, b, 0)
+  }
+
+  /** `a` against the `a.length` floats of `flat` from `off` — one row of a
+    * row-major flat index (Knn.FlatIndex), same fold as above.
+    */
+  def sqDist(a: Array[Float], flat: Array[Float], off: Int): Double = {
     var s = 0.0
     var i = 0
-    while (i < a.length) { val d = (a(i) - b(i)).toDouble; s += d * d; i += 1 }
+    while (i < a.length) {
+      val d = a(i).toDouble - flat(off + i).toDouble
+      s += d * d; i += 1
+    }
     s
   }
 

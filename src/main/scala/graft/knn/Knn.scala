@@ -38,8 +38,8 @@ object Knn {
   /** A driver/executor-local search index over one corpus: ids ascending,
     * row-major flat vectors, optional squared norms.
     */
-  private[knn] final case class FlatIndex(ids: Array[Long], flat: Array[Float],
-                                          sqNorms: Array[Double])
+  private[graft] final case class FlatIndex(ids: Array[Long], flat: Array[Float],
+                                            sqNorms: Array[Double])
 
   private def sqNormsOf(flat: Array[Float], n: Int, d: Int): Array[Double] = {
     val a = new Array[Double](n)
@@ -69,8 +69,9 @@ object Knn {
     * the RESIDENT SET — the sum of every index the driver builds and every
     * executor hosts — and `n ≤ Int.MaxValue` alone sits far above driver
     * memory (a 10⁸-row × d=64 corpus is ~26 GB of flat floats). This wall
-    * fails LOUDLY, before any large allocation, the moment the first
-    * streamed row reveals the dimension — naming the families that carry
+    * fails LOUDLY, before any large allocation (exact: on its probe;
+    * exactGrouped: the moment the first streamed row reveals the
+    * dimension) — naming the families that carry
     * the workload beyond the broadcast regime instead of letting the
     * driver OOM. `graft.knn.broadcastMaxBytes` (default 2 GiB — a
     * comfortable slice of one executor's memory, the quantity a broadcast
@@ -79,10 +80,9 @@ object Knn {
     */
   private def checkBroadcastBudget(totalRows: Long, d: Int, needNorms: Boolean,
                                    budget: Long, what: String): Unit = {
-    val perRow = d.toLong * 4 + 8 + (if (needNorms) 8 else 0) // flat + id + norm
-    val bytes  = totalRows * perRow
+    val bytes = indexBytes(totalRows, d, needNorms)
     if (bytes > budget) throw new IllegalStateException(
-      f"$what: the broadcast index needs $bytes%,d bytes ($totalRows%,d rows × " +
+      f"$what: the broadcast index needs at least $bytes%,d bytes ($totalRows%,d probed rows × " +
         f"d=$d) — over graft.knn.broadcastMaxBytes=$budget%,d. The exact " +
         "broadcast regime is for corpora that fit one executor; beyond it, " +
         "use the scale families: graft.ann.Ann.ivfDetSearch (IVF inverted " +
@@ -93,34 +93,118 @@ object Knn {
   private def broadcastBudget(spark: org.apache.spark.sql.SparkSession): Long =
     spark.conf.get("graft.knn.broadcastMaxBytes", (2L << 30).toString).toLong
 
-  /** Index build that never holds the corpus as boxed driver rows: rows
-    * stream in (one partition at a time) into pre-sized primitive arrays,
-    * then are id-sorted via an index permutation. Peak driver memory is
-    * ~2× the flat index (vs collect()'s boxed row array — tuple + array
-    * headers per row — held ALONGSIDE the index). Costs one extra corpus
-    * scan for the pre-count; the corpus is broadcast-regime-sized by
-    * contract, so that scan is cheap. The byte wall fires at the FIRST row
-    * (the dimension's first availability), before the flat allocation.
+  /** Resident bytes of a FlatIndex: flat floats + id (+ norm). */
+  private[graft] def indexBytes(rows: Long, d: Int, needNorms: Boolean): Long =
+    rows * (d.toLong * 4 + 8 + (if (needNorms) 8 else 0))
+
+  /** The same wall as a regime test instead of an error: true when a
+    * broadcast of `bytes` fits `graft.knn.broadcastMaxBytes`. Other
+    * operators with an in-task regime (GraphAnn's fused traversal) dispatch
+    * on it, so the session has one broadcast budget.
     */
-  private def buildIndexStreaming(it: Iterator[(Long, Array[Float])], n: Int,
-                                  needNorms: Boolean, budget: Long): FlatIndex = {
-    require(n > 0, "empty corpus")
-    var ids0: Array[Long] = null
-    var flat0: Array[Float] = null
-    var d = 0
+  private[graft] def fitsBroadcast(spark: org.apache.spark.sql.SparkSession, bytes: Long): Boolean =
+    bytes <= broadcastBudget(spark)
+
+  /** Rows a probe reads per partition before it stops: an index row costs
+    * at least `minRowBytes`, so past this many the input is over the wall
+    * whatever else it holds.
+    */
+  private[graft] def rowCap(spark: org.apache.spark.sql.SparkSession, minRowBytes: Long): Long =
+    broadcastBudget(spark) / minRowBytes + 1
+
+  /** What the one probe job learns about a corpus (vec_id, embedding)
+    * before any collect: rows, non-NULL embeddings, and their min/max
+    * dimension. Each partition folds its rows locally and stops after
+    * `rowCap` rows (8 bytes: an index row holds at least its id), so no
+    * partition costs more than the budget admits and nothing shuffles;
+    * once `rows` reaches that cap it is only a lower bound, already over
+    * the wall.
+    */
+  private[graft] final case class CorpusShape(rows: Long, nonNull: Long, minDim: Int, maxDim: Int) {
+    /** Every row has an embedding of one dimension: a FlatIndex holds the
+      * corpus row for row.
+      */
+    def uniform: Boolean = rows > 0 && nonNull == rows && minDim == maxDim
+  }
+
+  private[graft] def probeCorpus(corpus: DataFrame): CorpusShape = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val cap = rowCap(spark, 8)
+    val parts = corpus
+      .select(when(col("embedding").isNull, -1).otherwise(size(col("embedding"))))
+      .as[Int]
+      .mapPartitions { it =>
+        var n = 0L; var nn = 0L; var lo = Int.MaxValue; var hi = -1
+        while (n < cap && it.hasNext) {
+          val d = it.next()
+          n += 1
+          if (d >= 0) { nn += 1; lo = math.min(lo, d); hi = math.max(hi, d) }
+        }
+        Iterator((n, nn, lo, hi))
+      }.collect()
+    CorpusShape(parts.map(_._1).sum, parts.map(_._2).sum,
+      parts.map(_._3).foldLeft(Int.MaxValue)(math.min), parts.map(_._4).foldLeft(-1)(math.max))
+  }
+
+  /** Brings `rows` to the driver as one packed block per partition in as
+    * few jobs as the driver's result cap (`spark.driver.maxResultSize`)
+    * allows for an input of `bytes`: the partitions split into contiguous
+    * ranges of about half the cap, one job each (a single job below it,
+    * with every partition's task in parallel), and each block goes to
+    * `take` in partition order and is released before the next job runs.
+    * An input with fewer partitions than jobs is repartitioned first.
+    */
+  private[graft] def fetchPacked[T, B: scala.reflect.ClassTag](rows: org.apache.spark.sql.Dataset[T],
+                                                               bytes: Long)(pack: Iterator[T] => B)(
+                                                               take: B => Unit): Unit = {
+    val sc = rows.sparkSession.sparkContext
+    val cap = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    val jobs = if (cap <= 0) 1 else math.max(1L, (2 * bytes + cap - 1) / cap).toInt
+    val rdd = rows.rdd
+    val src = if (rdd.getNumPartitions >= jobs) rdd else rdd.repartition(jobs)
+    val blocks = src.mapPartitions(it => Iterator(pack(it)))
+    val n = blocks.getNumPartitions
+    for (j <- 0 until jobs) {
+      val got = sc.runJob(blocks, (it: Iterator[B]) => it.next(),
+        (n.toLong * j / jobs).toInt until (n.toLong * (j + 1) / jobs).toInt)
+      for (i <- got.indices) { take(got(i)); got(i) = null.asInstanceOf[B] }
+    }
+  }
+
+  /** A probed corpus as a driver-side FlatIndex: each partition packs its
+    * rows into primitive (ids, flat) arrays — failing on a NULL or
+    * off-dimension embedding — the blocks arrive through `fetchPacked`
+    * into pre-sized arrays, and `finishIndex` id-sorts them. No boxed
+    * driver rows; peak driver memory is ~2× the index (the arrival arrays
+    * plus the sorted copy, each block freed once copied). Callers check
+    * the wall on `shape` first.
+    */
+  private[graft] def collectIndex(corpus: DataFrame, shape: CorpusShape,
+                                  needNorms: Boolean): FlatIndex = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    require(shape.rows > 0, "empty corpus")
+    require(shape.rows <= Int.MaxValue, s"broadcast-regime corpus too large: ${shape.rows} rows")
+    val n = shape.rows.toInt
+    val d = shape.maxDim
+    val ids0 = new Array[Long](n)
+    val flat0 = new Array[Float](n * d)
     var i = 0
-    while (it.hasNext) {
-      val (id, v) = it.next()
-      if (flat0 == null) {
-        d = v.length
-        checkBroadcastBudget(n, d, needNorms, budget, "Knn.exact")
-        ids0 = new Array[Long](n)
-        flat0 = new Array[Float](n * d)
+    fetchPacked(corpus.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])],
+      indexBytes(n, d, needNorms = false)) { it =>
+      val ids = Array.newBuilder[Long]; val flat = Array.newBuilder[Float]
+      it.foreach { case (id, v) =>
+        require(v != null && v.length == d,
+          s"index build: vec_id $id has a NULL or non-$d-dimensional embedding")
+        ids += id; flat ++= v
       }
-      require(i < n, "corpus grew during index build")
-      ids0(i) = id
-      System.arraycopy(v, 0, flat0, i * d, d)
-      i += 1
+      (ids.result(), flat.result())
+    } { case (ids, flat) =>
+      require(i + ids.length <= n, "corpus grew during index build")
+      System.arraycopy(ids, 0, ids0, i, ids.length)
+      System.arraycopy(flat, 0, flat0, i * d, flat.length)
+      i += ids.length
     }
     require(i == n, s"corpus shrank during index build: expected $n rows, got $i")
     finishIndex(ids0, flat0, n, d, needNorms)
@@ -154,6 +238,7 @@ object Knn {
     val ids = idx.ids; val flat = idx.flat; val sqNorms = idx.sqNorms
     val n  = ids.length
     val dd = if (n == 0) 0 else flat.length / n
+    require(n == 0 || q.length == dd, s"Knn: query dimension ${q.length} != corpus dimension $dd")
     val kk = math.min(k, n)
     val heapD = new Array[Double](kk) // bounded "worst-first" heap
     val heapI = new Array[Int](kk)
@@ -222,13 +307,7 @@ object Knn {
         }
       } else {
         // "fold": bit-exact sequential (q_i - c_i)^2 accumulation
-        var s = 0.0
-        var t = 0
-        while (t < dd) {
-          val diff = q(t).toDouble - flat(off + t).toDouble
-          s += diff * diff; t += 1
-        }
-        score = math.sqrt(s)
+        score = math.sqrt(VectorOps.sqDist(q, flat, off))
       }
       val accept =
         if (size < kk) true
@@ -252,37 +331,19 @@ object Knn {
     val maxim  = metric != "l2" // similarity metrics rank descending
     val fastL2 = metric == "l2" && kernel == "fast"
     val fold   = kernel == "fold"
-    val corpusDs = corpus.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-    val nCorpus  = corpusDs.count()
-    require(nCorpus <= Int.MaxValue, s"broadcast-regime corpus too large: $nCorpus")
-    // The byte wall must fire BEFORE the local stream below: toLocalIterator
-    // collects one whole coalesced partition (~1/4 of the corpus as boxed
-    // rows) into the driver before its first next() — waiting for the first
-    // streamed row to reveal d would let a 26 GB corpus OOM the driver
-    // before the "fails loudly before any large allocation" check ever ran.
-    // The dimension costs one limit(1) job here (exactGrouped instead
-    // carries d in its pre-count aggregate).
+    // The byte wall fires on the probe, BEFORE any row reaches the driver.
+    // The probe reads every row's dimension (a NULL or atypically narrow
+    // first row must not under-check the wall) but stops each partition
+    // at the row count the budget admits.
     val needNorms = fastL2 || metric == "cosine"
-    if (nCorpus > 0) {
-      // NULL guard + narrow-first-row guard: a NULL first embedding would
-      // NPE at getInt before any named error, and an atypically narrow
-      // first row under-checks the wall — probe the max dimension over the
-      // first non-null rows instead (bounded: filter-then-limit stops at
-      // 1024 found rows, still one cheap job before any large allocation).
-      val dRow = corpus.filter(col("embedding").isNotNull)
-        .select(size(col("embedding")).as("__d")).limit(1024)
-        .agg(max(col("__d"))).head()
-      require(!dRow.isNullAt(0),
-        s"Knn.exact: every probed corpus embedding is NULL ($nCorpus rows) — " +
+    val shape = probeCorpus(corpus)
+    if (shape.rows > 0) {
+      require(shape.nonNull > 0,
+        s"Knn.exact: every probed corpus embedding is NULL (${shape.rows} rows) — " +
           "nothing to index")
-      checkBroadcastBudget(nCorpus, dRow.getInt(0), needNorms, broadcastBudget(spark), "Knn.exact")
+      checkBroadcastBudget(shape.rows, shape.maxDim, needNorms, broadcastBudget(spark), "Knn.exact")
     }
-    import scala.jdk.CollectionConverters._
-    // coalesce before streaming: toLocalIterator schedules one job per
-    // partition, so a 32-partition corpus pays 32 sequential driver
-    // round-trips; a handful of fat partitions stream the same bytes in ~4
-    val idx = buildIndexStreaming(corpusDs.coalesce(4).toLocalIterator().asScala, nCorpus.toInt,
-      needNorms = needNorms, budget = broadcastBudget(spark))
+    val idx = collectIndex(corpus, shape, needNorms)
     val bc    = spark.sparkContext.broadcast(idx)
     val parts = spark.sparkContext.defaultParallelism
 
@@ -357,7 +418,7 @@ object Knn {
     val totalRows = counts.values.sum
     val budget    = broadcastBudget(spark)
     val dim       = countRows.headOption.map(_._3).getOrElse(0)
-    if (totalRows * (dim.toLong * 4 + 8 + (if (needNorms) 8 else 0)) > budget)
+    if (indexBytes(totalRows, dim, needNorms) > budget)
       return exactGroupedCogrouped(queries, corpus, k, groupCol, metric,
         kernel, maxIndexRows, precomputedCounts = Some(counts))
 

@@ -93,21 +93,14 @@ class DeterminismSpec extends AnyFunSuite {
       VectorOps.l2ColHof($"a", $"b").as("l2h"),
       VectorOps.dotCol($"a", $"b").as("dn"),
       VectorOps.dotColHof($"a", $"b").as("dh")).collect()
-    // the reference fold kernel: DOUBLE-subtraction sequential accumulation
-    // (Ann.sqDistFold / Knn's "fold" kernel / the DuckDB lambda fold) — NOT
-    // VectorOps.l2, whose float-subtraction is the fast-kernel variant
-    def l2Fold(a: Array[Float], b: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) {
-        val d = a(i).toDouble - b(i).toDouble; s += d * d; i += 1
-      }
-      math.sqrt(s)
-    }
+    // the array fold kernel: VectorOps.l2 (IVF assignment, Knn's "fold"
+    // kernel and GraphAnn's fused traversal all call VectorOps.sqDist) must
+    // equal the native SQL fold bit for bit
     got.zip(rows).foreach { case (r, (a, b)) =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
         java.lang.Double.doubleToLongBits(r.getDouble(1)), "l2 native != HOF")
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
-        java.lang.Double.doubleToLongBits(l2Fold(a, b)), "l2 native != fold kernel")
+        java.lang.Double.doubleToLongBits(VectorOps.l2(a, b)), "l2 native != fold kernel")
       assert(java.lang.Double.doubleToLongBits(r.getDouble(2)) ==
         java.lang.Double.doubleToLongBits(r.getDouble(3)), "dot native != HOF")
       assert(java.lang.Double.doubleToLongBits(r.getDouble(2)) ==

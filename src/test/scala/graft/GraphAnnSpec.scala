@@ -286,6 +286,155 @@ class GraphAnnSpec extends AnyFunSuite {
       "a 1k-survivor filter must not pay the 5M-corpus beam")
   }
 
+  private def withBudget[A](bytes: Long)(body: => A): A = {
+    spark.conf.set("graft.knn.broadcastMaxBytes", bytes.toString)
+    try body finally spark.conf.unset("graft.knn.broadcastMaxBytes")
+  }
+
+  /** Rows as exact tuples: dist by its bit pattern, sorted. */
+  private def exactRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Int)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1),
+      java.lang.Double.doubleToLongBits(r.getDouble(2)), r.getInt(3))).toSeq.sorted
+
+  private def edgeRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
+    df.select("src", "dst", "dist").collect().map(r => (r.getLong(0), r.getLong(1),
+      java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSeq.sorted
+
+  test("fused and join regimes return identical rows for beam, layered and insert searches") {
+    import graft.functions.GraftCols
+    // a corpus with duplicated ids: ids 20–29 gain a second row carrying
+    // another vector, ids 0–4 (queries themselves) an identical second row
+    val corpus = emb.select("vec_id", "embedding")
+      .unionByName(emb.filter(col("vec_id").between(120, 129))
+        .select((col("vec_id") - 100).as("vec_id"), col("embedding")))
+      .unionByName(emb.filter(col("vec_id").between(0, 4)).select("vec_id", "embedding"))
+      .cache()
+    // every node gains an edge into a node without a corpus row; a third
+    // of the edge rows appear twice
+    val dirty = edges.select("src", "dst", "dist")
+      .unionByName(emb.select(col("vec_id").as("src"), lit(999999L).as("dst"), lit(0.0).as("dist")))
+      .unionByName(edges.filter(col("src") % 3 === 0).select("src", "dst", "dist"))
+      .cache()
+    // more entries than the beam, one of them without a corpus row
+    val manyEntries = GraphAnn.entryPoints(emb, 24)
+      .unionByName(spark.range(1).select(lit(888888L).as("node")))
+    val isRep = GraftCols.md5Mod(
+      concat(col("vec_id").cast("string"), lit("|grep")), 8) === 0L
+    val repEdges = KnnGraph.edges(emb.filter(isRep), 8).select("src", "dst", "dist").cache()
+    val isNew = GraftCols.md5Mod(
+      concat(col("vec_id").cast("string"), lit("|t16")), 8) === 0L
+    val oldC = corpus.filter(!isNew)
+    val newC = emb.filter(isNew)
+
+    // the same searches, run once under each regime
+    def searches(): Seq[Seq[Product]] = Seq(
+      exactRows(GraphAnn.beamSearch(queries, corpus, dirty, manyEntries, 10, 16, 3)),
+      exactRows(GraphAnn.beamSearch(queries, corpus, dirty, manyEntries, 10, 16, 0)),
+      exactRows(GraphAnn.layeredSearch(queries, corpus, repEdges, dirty, manyEntries,
+        k = 10, repBeam = 12, baseBeam = 10, repRounds = 2, baseRounds = 2)),
+      {
+        val (base, rep) = GraphAnn.insertBatch(newC, repEdges, dirty, manyEntries, oldC,
+          isRep, outDeg = 16, insBeam = 16, repRounds = 2, baseRounds = 2)
+        Seq(base.newEdges, base.retrimmed, base.incremented, rep.newEdges, rep.incremented)
+          .flatMap(edgeRows)
+      })
+    assert(GraphAnn.fusedSizes(corpus, Seq(dirty, repEdges)).map(_.corpus.maxDim).contains(64),
+      "the fixture must take the fused regime under the default budget")
+    val fused = searches()
+    val joined = withBudget(1000L) {
+      assert(GraphAnn.fusedSizes(corpus, Seq(dirty, repEdges)).isEmpty,
+        "a 1000-byte budget must route to the join plan")
+      searches()
+    }
+    Seq("beam", "beam rounds=0", "layered", "insert").zip(fused.zip(joined)).foreach {
+      case (what, (f, j)) =>
+        assert(f.nonEmpty, s"$what: empty result")
+        val same = f == j
+        assert(same, s"$what: fused and join regimes differ: fused-only " +
+          s"${f.diff(j).take(3)}, join-only ${j.diff(f).take(3)}")
+    }
+    // the dirty inputs were reached: a duplicated id answers twice for
+    // some query, and the corpus-less node never does
+    val beamRows = fused.head.asInstanceOf[Seq[(Long, Long, Long, Int)]]
+    assert(beamRows.groupBy(r => (r._1, r._2)).exists(_._2.size > 1),
+      "no query reached a duplicated corpus id")
+    assert(!beamRows.exists(r => r._2 == 999999L || r._2 == 888888L))
+    corpus.unpersist(); dirty.unpersist(); repEdges.unpersist()
+  }
+
+  test("below the wall a beam search is a handful of jobs and no shuffle") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val sc = spark.sparkContext
+    val group = "graphann-job-gate"
+    val drainGroup = "graphann-job-gate-drain"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == group) jobs.incrementAndGet()
+        else if (g == drainGroup) drained.countDown()
+      }
+    }
+    // ann_serve's shape: beam 32, 4 rounds, entries shared by all queries.
+    // Inputs are materialized first, as a serving loop holds them, and
+    // checkpointed rather than cached (another test's unpersist of an
+    // equal plan would drop a shared cache entry): the gate counts the
+    // search's own jobs, not a rebuild of its inputs
+    val corpus = emb.select("vec_id", "embedding").localCheckpoint()
+    val graph = edges.select("src", "dst").localCheckpoint()
+    val ents = GraphAnn.entryPoints(corpus, 4).localCheckpoint()
+    val qs = corpus.filter(col("vec_id") < 200)
+    sc.addSparkListener(listener)
+    val res = try {
+      sc.setJobGroup(group, "beam search below the wall")
+      val df = try {
+        val df = GraphAnn.beamSearch(qs, corpus, graph, ents, k = 10, beam = 32, rounds = 4)
+        assert(df.collect().length == 200 * 10)
+        df
+      } finally sc.clearJobGroup()
+      sc.setJobGroup(drainGroup, "listener-bus drain marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+      df
+    } finally sc.removeSparkListener(listener)
+    info(s"${jobs.get()} jobs")
+    assert(jobs.get() <= 12, s"fused beam search started ${jobs.get()} jobs (join plan: ~33)")
+    val plan = res.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.isEmpty, s"the fused search shuffles:\n$plan")
+  }
+
+  test("the fused regime answers when the driver's result cap is below the corpus and edge bytes") {
+    val sc = spark.sparkContext
+    val corpus = emb.select("vec_id", "embedding").repartition(8).localCheckpoint()
+    val graph = edges.select("src", "dst").localCheckpoint()
+    val ents = GraphAnn.entryPoints(corpus, 4).localCheckpoint()
+    val qs = corpus.filter(col("vec_id") < 50)
+    def search() = exactRows(GraphAnn.beamSearch(qs, corpus, graph, ents, k = 10, beam = 32, rounds = 4))
+    val want = search()
+    val sizes = GraphAnn.fusedSizes(corpus, Seq(graph)).get
+    val corpusBytes = graft.knn.Knn.indexBytes(sizes.corpus.rows, sizes.corpus.maxDim, needNorms = false)
+    val cap = math.min(corpusBytes, sizes.edges.values.sum * 16) / 4
+    // spark.driver.maxResultSize is a core conf the session API cannot
+    // change at runtime; each new task set reads it from the live SparkConf
+    val live = sc.getClass.getMethod("conf").invoke(sc).asInstanceOf[org.apache.spark.SparkConf]
+    val before = live.getOption("spark.driver.maxResultSize")
+    live.set("spark.driver.maxResultSize", cap.toString)
+    try {
+      val e = intercept[org.apache.spark.SparkException](corpus.collect())
+      assert(e.getMessage.contains("maxResultSize"), e.getMessage)
+      assert(GraphAnn.fusedSizes(corpus, Seq(graph)).isDefined, "the cap must not change the regime")
+      assert(search() == want, "the capped fused search must return the uncapped rows")
+    } finally before match {
+      case Some(v) => live.set("spark.driver.maxResultSize", v)
+      case None    => live.remove("spark.driver.maxResultSize")
+    }
+  }
+
   test("per-round frontier join consumes the bucketed edge artifact — no edge-side Exchange") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
